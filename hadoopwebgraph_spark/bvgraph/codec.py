@@ -15,6 +15,12 @@ The encoder is this library's own (the reference has none — it only
 re-writes offsets, HdfsBVGraph.java:394-408): per node it tries every
 admissible reference candidate in the window, encodes each to a scratch
 bit writer, and keeps the cheapest, honoring max_ref_count chains.
+
+This module is the only caller of the C kernel (``native``). Its four
+kernel entry points — ``decode_range``, ``encode_segment_csr``,
+``encode_offsets`` and ``load_offsets`` — call the kernel once and run
+the Python spec below only when the kernel is unavailable; output is
+identical either way.
 """
 
 from __future__ import annotations
@@ -24,7 +30,8 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from .bitio import GAMMA, ZETA, BitReader, BitWriter, int2nat, nat2int
+from . import native
+from .bitio import GAMMA, ZETA, BitReader, BitWriter, int2nat, nat2int, pad
 from .properties import BVGraphProperties
 
 
@@ -137,69 +144,43 @@ def _encode_node(
             wr_res(extras[i] - extras[i - 1] - 1)
 
 
+def to_csr(adjacency: list[list[int]]) -> tuple[np.ndarray, np.ndarray]:
+    """Adjacency lists -> CSR: flat int32 ``values`` and n+1 int64
+    ``list_offsets``."""
+    list_offsets = np.zeros(len(adjacency) + 1, dtype=np.int64)
+    np.cumsum([len(a) for a in adjacency], out=list_offsets[1:])
+    values = np.fromiter(
+        (v for a in adjacency for v in a), dtype=np.int32, count=int(list_offsets[-1])
+    )
+    return values, list_offsets
+
+
 def encode_graph(
     adjacency: list[list[int]],
     p: BVGraphProperties | None = None,
     **props_kw,
 ) -> tuple[bytes, bytes, BVGraphProperties]:
-    """Encode an adjacency list into (.graph bytes, .offsets bytes, props).
-
-    Reference selection: for each node try ref=0 plus every window
-    candidate whose chain depth stays within max_ref_count; keep the
-    encoding with the fewest bits (measured exactly on a scratch writer).
-    """
-    n = len(adjacency)
-    arcs = sum(len(a) for a in adjacency)
+    """Encode an adjacency list into (.graph bytes, .offsets bytes, props):
+    the whole graph as one segment, so references may reach back across
+    every node (full cross-node reference selection)."""
+    values, list_offsets = to_csr(adjacency)
     if p is None:
-        p = BVGraphProperties(nodes=n, arcs=arcs, **props_kw)
+        p = BVGraphProperties(nodes=len(adjacency), arcs=len(values), **props_kw)
     else:
-        p.nodes, p.arcs = n, arcs
+        p.nodes, p.arcs = len(adjacency), len(values)
     p.validate()
-
-    w = BitWriter()
-    offsets = [0]
-    ref_counts = [0] * max(p.window_size + 1, 1)
-
-    for x in range(n):
-        succ = adjacency[x]
-        _check_ascending(succ, x)
-        best: tuple[int, int, bytes] | None = None  # (bits, ref, payload)
-        candidates = [0]
-        if p.window_size > 0:
-            for r in range(1, min(p.window_size, x) + 1):
-                if ref_counts[(x - r) % len(ref_counts)] + 1 <= p.max_ref_count:
-                    candidates.append(r)
-        for r in candidates:
-            scratch = BitWriter()
-            _encode_node(
-                scratch, p, x, succ, r, adjacency[x - r] if r > 0 else None
-            )
-            if best is None or scratch.nbits < best[0]:
-                best = (scratch.nbits, r, scratch)
-        assert best is not None
-        _, ref, _ = best
-        ref_counts[x % len(ref_counts)] = 0 if ref == 0 else ref_counts[(x - ref) % len(ref_counts)] + 1
-        _encode_node(w, p, x, succ, ref, adjacency[x - ref] if ref > 0 else None)
-        offsets.append(w.nbits)
-
-    graph_bytes = w.to_bytes()
-
-    # offsets stream: n+1 deltas, offset-coded (default gamma)
-    ow = BitWriter()
-    wr_off = ow.make_writer(p.offset_code, p.zeta_k)
-    last = 0
-    for off in offsets:
-        wr_off(off - last)
-        last = off
-    return graph_bytes, ow.to_bytes(), p
+    _, graph_bytes, offsets = encode_segment_csr(values, list_offsets, 0, p)
+    return graph_bytes, encode_offsets(offsets, p)[1], p
 
 
 def encode_segment_py(
     adj: list[list[int]], first_src: int, p: BVGraphProperties
 ) -> tuple[int, bytes, list[int]]:
     """Encode a window-isolated segment: nodes ``first_src + i`` with
-    local reference selection (refs stay inside the segment) — the
-    executable spec for the C encoder and the sink's fallback.
+    local reference selection (refs stay inside the segment). Per node it
+    tries ref=0 plus every window candidate whose chain depth stays within
+    max_ref_count and keeps the encoding with the fewest bits (measured
+    exactly on a scratch writer) — the executable spec for the C encoder.
 
     Returns (nbits, buffer of ceil(nbits/8) bytes, n+1 bit offsets).
     """
@@ -231,35 +212,16 @@ def encode_segment_py(
     return w.nbits, w.to_bytes(), offsets
 
 
-def encode_segment(
-    adj: list[list[int]], first_src: int, p: BVGraphProperties
-) -> tuple[int, bytes, list[int]]:
-    """Segment encode via the C kernel when available (bit-identical
-    output), else the Python spec."""
-    if adj:
-        import numpy as np
-
-        list_offsets = np.zeros(len(adj) + 1, dtype=np.int64)
-        np.cumsum([len(a) for a in adj], out=list_offsets[1:])
-        values = np.fromiter(
-            (v for a in adj for v in a), dtype=np.int32, count=int(list_offsets[-1])
-        )
-        return encode_segment_csr(values, list_offsets, first_src, p)
-    return encode_segment_py(adj, first_src, p)
-
-
 def encode_segment_csr(
     values, list_offsets, first_src: int, p: BVGraphProperties
-) -> tuple[int, bytes, list[int]]:
+) -> tuple[int, bytes, np.ndarray]:
     """Segment encode from CSR adjacency (flat ``values`` int32 + n+1
     ``list_offsets`` int64) — the layout Arrow list columns already use,
-    so the sink's mapInArrow path feeds the C kernel without ever
-    materializing per-row Python lists. Falls back to the Python spec
-    (bit-identical) when the kernel is unavailable."""
-    import numpy as np
+    so the sink's mapInArrow path feeds the kernel without materializing
+    per-row Python lists.
 
-    from . import native
-
+    Returns (nbits, buffer of ceil(nbits/8) bytes, n+1 int64 bit offsets).
+    """
     # strict-ascending guard, vectorized: a non-positive gap is legal
     # only at a list boundary (see _check_ascending)
     if len(values) > 1:
@@ -276,13 +238,31 @@ def encode_segment_csr(
                 )
     res = native.encode_segment(values, list_offsets, first_src, p)
     if res is not None:
-        nbits, buf, offsets = res
-        return nbits, buf, offsets.tolist()
+        return res
     adj = [
         values[list_offsets[i] : list_offsets[i + 1]].tolist()
         for i in range(len(list_offsets) - 1)
     ]
-    return encode_segment_py(adj, first_src, p)
+    nbits, buf, offsets = encode_segment_py(adj, first_src, p)
+    return nbits, buf, np.asarray(offsets, dtype=np.int64)
+
+
+def encode_offsets(positions, p: BVGraphProperties) -> tuple[int, bytes]:
+    """Delta-code a monotone run of bit positions, starting from 0, in
+    the offsets code. Returns (nbits, bytes of ceil(nbits/8)), pad bits
+    zero. A whole ``.offsets`` stream is the encode of all n+1 positions
+    (the first one, 0, codes as 0)."""
+    arr = np.asarray(positions, dtype=np.int64)
+    res = native.encode_deltas(arr, 0, p.offset_code, p.zeta_k)
+    if res is not None:
+        return res
+    w = BitWriter()
+    wr = w.make_writer(p.offset_code, p.zeta_k)
+    last = 0
+    for v in arr.tolist():
+        wr(v - last)
+        last = v
+    return w.nbits, w.to_bytes()
 
 
 # ---------------------------------------------------------------------------
@@ -295,11 +275,8 @@ def load_offsets(offsets_bytes: bytes, p: BVGraphProperties) -> np.ndarray:
     (n+1 entries) — the NumPy equivalent of the reference's Elias-Fano
     list (HdfsBVGraph.java:371-387,410-436). 8 bytes/node keeps 134M nodes
     in ~1 GB driver memory; EliasFanoOffsets (below the planner) compacts
-    the retained copy."""
-    from . import native
-    from .bitio import pad as _pad
-
-    fast = native.decode_offsets(_pad(offsets_bytes), p.nodes + 1, p.offset_code, p.zeta_k)
+    the retained copy. Kernel-detected corruption raises ``ValueError``."""
+    fast = native.decode_offsets(pad(offsets_bytes), p.nodes + 1, p.offset_code, p.zeta_k)
     if fast is not None:
         return fast
     r = BitReader(offsets_bytes)
@@ -312,12 +289,80 @@ def load_offsets(offsets_bytes: bytes, p: BVGraphProperties) -> np.ndarray:
     return out
 
 
+def decode_range(
+    graph_bytes: bytes,
+    p: BVGraphProperties,
+    from_node: int = 0,
+    up_to: int | None = None,
+    seed_offsets: np.ndarray | None = None,
+    seed_base: int = 0,
+    want_bitpos: bool = False,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
+    """Decode nodes [from_node, up_to) (default: to the last node) of a
+    ``.graph`` buffer into CSR form.
+
+    A mid-graph start needs ``seed_offsets``: the bit positions, within
+    ``graph_bytes``, of nodes [seed_base, from_node] — enough to seed the
+    reference window and the reference chains it recurses into.
+
+    Returns (values int32[], list_offsets int64[n+1], bitpos), where
+    ``bitpos`` (int64[n], the bit cursor after each node) is computed only
+    when ``want_bitpos`` and is None otherwise. A corrupt or truncated
+    buffer raises ``ValueError``."""
+    if up_to is None:
+        up_to = p.nodes
+    if from_node > 0 and seed_offsets is None:
+        raise ValueError("mid-graph start requires seed_offsets")
+    res = native.decode_range(
+        pad(graph_bytes),
+        p,
+        from_node,
+        up_to,
+        seed_offsets=seed_offsets,
+        seed_base=seed_base,
+        start_bit=int(seed_offsets[-1]) if from_node > 0 else 0,
+        want_bitpos=want_bitpos,
+    )
+    if res is not None:
+        return res
+    offsets = None if seed_offsets is None else _OffsetSlice(seed_base, seed_offsets)
+    lists, bitpos = [], []
+    try:
+        it = NodeIterator(graph_bytes, p, from_node, up_to, offsets)
+        for _, lst in it:
+            lists.append(lst)
+            bitpos.append(it.reader.pos)
+    except IndexError as e:
+        raise ValueError(f"corrupt or truncated .graph stream ({e})") from e
+    values, list_offsets = to_csr(lists)
+    return values, list_offsets, np.asarray(bitpos, np.int64) if want_bitpos else None
+
+
+class _OffsetSlice:
+    """Absolute-indexed view over a seed offsets sub-array starting at node
+    ``base``. Out-of-slice access fails loudly — a reference chain deeper
+    than the planned backreach is a bug, not a wraparound."""
+
+    __slots__ = ("base", "arr")
+
+    def __init__(self, base: int, arr):
+        self.base = base
+        self.arr = arr
+
+    def __getitem__(self, i: int) -> int:
+        j = i - self.base
+        if j < 0 or j >= len(self.arr):
+            raise IndexError(
+                f"node {i} outside shipped offsets slice "
+                f"[{self.base}, {self.base + len(self.arr)})"
+            )
+        return int(self.arr[j])
+
+
 class _Decoder:
     """Shared decode state over one .graph buffer."""
 
     def __init__(self, graph_bytes: bytes, p: BVGraphProperties, offsets: np.ndarray | None = None):
-        from .bitio import pad
-
         self.data = pad(graph_bytes)  # padded ONCE; readers share it
         self.p = p
         self.offsets = offsets
@@ -505,21 +550,5 @@ class BVGraphFiles:
 def write_offsets(graph_bytes: bytes, p: BVGraphProperties) -> bytes:
     """Regenerate the offsets stream by a full sequential decode — the
     reference's only sink (writeOffsets, HdfsBVGraph.java:394-408)."""
-    from . import native
-    from .bitio import pad as _pad
-
-    res = native.decode_range(_pad(graph_bytes), p, 0, p.nodes, want_bitpos=True)
-    if res is not None:
-        positions = [0] + res[2].tolist()
-    else:
-        it = NodeIterator(graph_bytes, p)
-        positions = [0]
-        for _ in it:
-            positions.append(it.reader.pos)
-    w = BitWriter()
-    wr_off = w.make_writer(p.offset_code, p.zeta_k)
-    last = 0
-    for pos in positions:
-        wr_off(pos - last)
-        last = pos
-    return w.to_bytes()
+    _, _, bitpos = decode_range(graph_bytes, p, want_bitpos=True)
+    return encode_offsets(np.concatenate([[0], bitpos]), p)[1]

@@ -1,6 +1,6 @@
 """Spark 4 Python DataSource for BVGraph: ``spark.read.format("bvgraph")``.
 
-The Spark-native re-expression of the reference's Hadoop InputFormat
+The Spark DataSource re-expression of the reference's Hadoop InputFormat
 (WebGraphInputFormat.java:16-19): one row per node, schema
 ``src INT, adj ARRAY<INT>``, with options ``basename`` and ``numSplits``
 (default 100, WebGraphInputFormat.java:19,134-156).
@@ -15,10 +15,15 @@ file (fixing the per-task reload flaw noted in SURVEY.md §3.1).
 
 Executor-side ``read`` issues ONE ranged byte request covering exactly
 its partition's extent ``[offsets[seed_base]>>3, ceil(offsets[up_to]/8))``
-(bit positions rebased to the buffer), decodes the node range
-sequentially, and yields Arrow record batches (columnar end-to-end; the
-reference is row-at-a-time). Total bytes moved per scan ≈ file size
-regardless of partition count — no read amplification.
+(bit positions rebased to the buffer), decodes the node range with
+``codec.decode_range`` (C kernel, or the Python spec without it) into
+CSR arrays, and yields Arrow record batches of ``BATCH_ROWS`` rows sliced
+from them (columnar end-to-end; the reference is row-at-a-time). Total
+bytes moved per scan ≈ file size regardless of partition count — no read
+amplification.
+
+Options: ``basename`` (required), ``numSplits``, ``targetBytes``,
+``fromNode``, ``toNode``.
 
 Filter pruning: ``src`` range predicates prune partitions at plan time.
 We conservatively report every filter as unsupported so Spark re-applies
@@ -29,7 +34,6 @@ partitions that provably contain no matching node.
 from __future__ import annotations
 
 import math
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql.datasource import (
@@ -46,11 +50,12 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
-from .codec import NodeIterator, load_offsets
+from .codec import decode_range, load_offsets
 from .io import file_stat, read_bytes, read_bytes_range, read_text
 from .properties import BVGraphProperties, parse_properties
 
 DEFAULT_SPLITS = 100  # WebGraphInputFormat.java:19
+BATCH_ROWS = 8192  # rows per Arrow record batch handed to Spark
 
 # Driver-side plan cache: parsing .properties and folding the delta-coded
 # .offsets stream is O(n) — do it once per (basename, file identity), not
@@ -90,30 +95,6 @@ SCHEMA = StructType(
 )
 
 
-class _OffsetSlice:
-    """Absolute-indexed view over a shipped offsets sub-array, rebased to
-    the partition's ranged byte window: entry ``i`` is the bit position of
-    node ``i`` *within the buffer read by this task* (absolute bit minus
-    ``bit_base``). Out-of-slice access fails loudly — a reference chain
-    deeper than the planned backreach is a bug, not a wraparound."""
-
-    __slots__ = ("base", "arr", "bit_base")
-
-    def __init__(self, base: int, arr: list[int], bit_base: int = 0):
-        self.base = base
-        self.arr = arr
-        self.bit_base = bit_base
-
-    def __getitem__(self, i: int) -> int:
-        j = i - self.base
-        if j < 0 or j >= len(self.arr):
-            raise IndexError(
-                f"node {i} outside shipped offsets slice "
-                f"[{self.base}, {self.base + len(self.arr)})"
-            )
-        return self.arr[j] - self.bit_base
-
-
 @dataclass
 class BVGraphPartition(InputPartition):
     graph_path: str
@@ -139,7 +120,6 @@ class BVGraphReader(DataSourceReader):
         self.num_splits = int(options.get("numsplits", DEFAULT_SPLITS))
         if self.num_splits < 1:
             raise ValueError(f"numSplits must be >= 1, got {self.num_splits}")
-        self.batch_rows = int(options.get("batchrows", 8192))
         # .option("targetBytes", 256 << 20): size partitions by compressed
         # byte extent instead of a fixed split count — the maxPartitionBytes
         # analog for this source; overrides numSplits when set
@@ -148,9 +128,6 @@ class BVGraphReader(DataSourceReader):
         )
         if self.target_bytes is not None and self.target_bytes < 1:
             raise ValueError(f"targetBytes must be >= 1, got {self.target_bytes}")
-        # .option("nonative", "true") forces the pure-Python decode path
-        # (used by tests to certify the fallback through the full source)
-        self.use_native = options.get("nonative", "").lower() != "true"
         # manual pruning knobs (also driven by pushFilters)
         self.from_node = int(options.get("fromnode", 0))
         self.to_node_excl: int | None = (
@@ -259,11 +236,12 @@ class BVGraphReader(DataSourceReader):
         return parts
 
     def read(self, partition: BVGraphPartition):
+        import numpy as np
         import pyarrow as pa
 
-        p = parse_properties(partition.props_text)
         if partition.up_to <= partition.from_node:
             return
+        p = parse_properties(partition.props_text)
         # ONE ranged request for exactly this task's byte extent — never the
         # whole file (≙ the reference's per-split seekable stream,
         # WebGraphInputFormat.java:108, HdfsRepositionableStream.java:17-29).
@@ -272,85 +250,33 @@ class BVGraphReader(DataSourceReader):
             partition.start_byte,
             partition.end_byte - partition.start_byte,
         )
-        bit_base = partition.start_byte << 3
-
-        if self.use_native:
-            from .bitio import pad as _pad
-            from . import native
-
-            import numpy as np
-
-            seeds = (
-                np.asarray(partition.seed_offsets, dtype=np.int64) - bit_base
-                if partition.from_node > 0
-                else None
-            )
-            res = native.decode_range(
-                _pad(graph_bytes),
-                p,
-                partition.from_node,
-                partition.up_to,
-                seed_offsets=seeds,
-                seed_base=partition.seed_base,
-                start_bit=int(seeds[-1]) if seeds is not None else 0,
-            )
-            if res is not None:
-                values, list_offsets, _ = res
-                n = partition.up_to - partition.from_node
-                srcs = np.arange(
-                    partition.from_node, partition.up_to, dtype=np.int32
-                )
-                for s in range(0, n, self.batch_rows):
-                    e = min(s + self.batch_rows, n)
-                    lo, hi = int(list_offsets[s]), int(list_offsets[e])
-                    adj = pa.ListArray.from_arrays(
-                        pa.array(
-                            (list_offsets[s : e + 1] - lo).astype(np.int32)
-                        ),
-                        pa.array(values[lo:hi]),
-                    )
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(srcs[s:e]), adj], names=["src", "adj"]
-                    )
-                return
-            # kernel unavailable/errored: fall through to the Python decoder
-
-        # bit positions in the shipped offsets are absolute; rebase them to
-        # the ranged buffer, which starts at start_byte*8
-        offsets = _OffsetSlice(
-            partition.seed_base,
-            partition.seed_offsets,
-            bit_base=bit_base,
+        # shipped bit positions are absolute; rebase them to the ranged
+        # buffer, which starts at start_byte*8
+        seeds = (
+            np.asarray(partition.seed_offsets, dtype=np.int64)
+            - (partition.start_byte << 3)
+            if partition.from_node > 0
+            else None
         )
-        it = NodeIterator(
+        values, list_offsets, _ = decode_range(
             graph_bytes,
             p,
-            from_node=partition.from_node,
-            upper_bound=partition.up_to,
-            offsets=offsets if partition.from_node > 0 else None,
+            partition.from_node,
+            partition.up_to,
+            seed_offsets=seeds,
+            seed_base=partition.seed_base,
         )
-
-        srcs: list[int] = []
-        adj_offsets: list[int] = [0]
-        adj_values: list[int] = []
-        for x, lst in it:
-            srcs.append(x)
-            adj_values.extend(lst)
-            adj_offsets.append(len(adj_values))
-            if len(srcs) >= self.batch_rows:
-                yield _to_batch(pa, srcs, adj_offsets, adj_values)
-                srcs, adj_offsets, adj_values = [], [0], []
-        if srcs:
-            yield _to_batch(pa, srcs, adj_offsets, adj_values)
-
-
-def _to_batch(pa, srcs, adj_offsets, adj_values):
-    src_arr = pa.array(srcs, type=pa.int32())
-    adj_arr = pa.ListArray.from_arrays(
-        pa.array(adj_offsets, type=pa.int32()),
-        pa.array(adj_values, type=pa.int32()),
-    )
-    return pa.RecordBatch.from_arrays([src_arr, adj_arr], names=["src", "adj"])
+        srcs = np.arange(partition.from_node, partition.up_to, dtype=np.int32)
+        for s in range(0, len(srcs), BATCH_ROWS):
+            e = min(s + BATCH_ROWS, len(srcs))
+            lo, hi = int(list_offsets[s]), int(list_offsets[e])
+            adj = pa.ListArray.from_arrays(
+                pa.array((list_offsets[s : e + 1] - lo).astype(np.int32)),
+                pa.array(values[lo:hi]),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(srcs[s:e]), adj], names=["src", "adj"]
+            )
 
 
 def _src_members(f: Filter) -> list[int] | None:

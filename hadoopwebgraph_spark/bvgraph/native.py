@@ -1,18 +1,18 @@
-"""ctypes loader for the C decode kernel (_kernel.c) — the fast path for
-the BVGraph source's per-partition decode and the driver's offsets fold.
-
-The pure-Python decoder in codec.py remains the executable spec and the
-always-available fallback: anything here failing (no C compiler, load
-error, kernel error return) falls back silently. Both implementations are
-pinned to identical outputs by the hypothesis round-trip suite
-(tests/test_codec_properties.py) and an explicit native-vs-python
-equality test.
+"""ctypes loader for the C kernel (_kernel.c): the fast path behind
+``codec``'s decode, segment-encode and offsets entry points. ``codec`` is
+the only caller; it runs its pure-Python spec when a function here
+returns ``None``, which happens only when the kernel is unavailable (no C
+compiler, load error, ``SPARK_GRAFT_NO_NATIVE=1``). Malformed input the
+kernel detects raises ``ValueError`` instead: re-running the Python spec
+on a buffer the kernel rejected would decode zero padding into garbage.
+Both implementations are pinned to identical outputs by the hypothesis
+suite (tests/test_codec_properties.py).
 
 Compilation happens at most once per source hash: ``cc -O3 -shared
 -fPIC`` into ``_build/kernel-<hash>.so`` next to this file, with an
 atomic rename so concurrently-forked Spark Python workers never observe a
 half-written .so (losers of the race just overwrite with identical
-bytes). Set ``SPARK_GRAFT_NO_NATIVE=1`` to force the Python path.
+bytes).
 """
 
 from __future__ import annotations
@@ -105,6 +105,35 @@ def _borrow_u8p(buf: bytes) -> _i8p:
     return ctypes.cast(ctypes.c_char_p(buf), _i8p)
 
 
+def _format_args(p) -> list[int]:
+    """The kernel's shared format parameters, in its argument order."""
+    return [
+        p.window_size,
+        p.max_ref_count,
+        p.min_interval_length,
+        p.zeta_k,
+        p.outdegree_code,
+        p.reference_code,
+        p.block_count_code,
+        p.block_code,
+        p.residual_code,
+    ]
+
+
+def _sized(call, cap: int, what: str):
+    """Run ``call(cap) -> (rc, out)``. A code below -8 means ``cap`` was too
+    small and names the size needed, so the call is retried at that size;
+    any other negative code is malformed input the kernel detected."""
+    for _ in range(8):
+        rc, out = call(cap)
+        if rc >= 0:
+            return int(rc), out
+        if rc >= -8:
+            raise ValueError(f"{what} (kernel rc={rc})")
+        cap = -rc
+    raise RuntimeError(f"{what}: the kernel kept asking for a larger buffer")
+
+
 def decode_range(
     padded: bytes,
     p,
@@ -117,9 +146,8 @@ def decode_range(
 ):
     """Decode nodes [from_node, up_to) from a bitio.pad()-padded buffer.
 
-    Returns (values int32[], list_offsets int64[n+1], bitpos int64[n]|None)
-    or None if the kernel is unavailable or errored (caller falls back to
-    the Python decoder)."""
+    Returns (values int32[], list_offsets int64[n+1], bitpos int64[n]|None),
+    or None if the kernel is unavailable."""
     lib = get_lib()
     if lib is None:
         return None
@@ -130,52 +158,31 @@ def decode_range(
             np.zeros(1, np.int64),
             np.empty(0, np.int64) if want_bitpos else None,
         )
-
-    data = _borrow_u8p(padded)
-    data_bytes = len(padded) - 16  # bitio._PAD length
-
-    if seed_offsets is not None:
-        seeds = np.ascontiguousarray(seed_offsets, dtype=np.int64)
-        seeds_p = seeds.ctypes.data_as(_i64p)
-    else:
-        seeds = None
-        seeds_p = None
-
+    seeds = None if seed_offsets is None else np.ascontiguousarray(seed_offsets, np.int64)
     list_offsets = np.empty(n + 1, dtype=np.int64)
     bitpos = np.empty(n, dtype=np.int64) if want_bitpos else None
 
-    cap = max(4 * data_bytes + 1024, 4096)
-    for _ in range(8):  # overflow retries (first retry is exact-sized)
+    def call(cap):
         values = np.empty(cap, dtype=np.int32)
         rc = lib.bvg_decode_range(
-            data,
-            data_bytes,
-            p.window_size,
-            p.max_ref_count,
-            p.min_interval_length,
-            p.zeta_k,
-            p.outdegree_code,
-            p.reference_code,
-            p.block_count_code,
-            p.block_code,
-            p.residual_code,
+            _borrow_u8p(padded),
+            len(padded) - 16,  # bitio._PAD length
+            *_format_args(p),
             from_node,
             up_to,
-            seeds_p,
+            None if seeds is None else seeds.ctypes.data_as(_i64p),
             seed_base,
             start_bit,
             values.ctypes.data_as(_i32p),
             cap,
             list_offsets.ctypes.data_as(_i64p),
-            bitpos.ctypes.data_as(_i64p) if want_bitpos else None,
+            None if bitpos is None else bitpos.ctypes.data_as(_i64p),
         )
-        if rc >= 0:
-            return values[:rc], list_offsets, bitpos
-        if rc < -8:  # buffer too small; kernel reports the exact need
-            cap = -rc
-            continue
-        return None  # kernel error: fall back to the Python decoder
-    return None
+        return rc, values
+
+    cap = max(4 * (len(padded) - 16) + 1024, 4096)
+    rc, values = _sized(call, cap, "corrupt or truncated .graph stream")
+    return values[:rc], list_offsets, bitpos
 
 
 def encode_segment(
@@ -183,10 +190,9 @@ def encode_segment(
 ):
     """Encode a window-isolated segment (CSR adjacency) with the C kernel.
 
-    Returns (nbits, buf bytes of ceil(nbits/8), offsets int64[n+1]) or
-    None if the kernel is unavailable/errored (caller falls back to the
-    Python encoder). Output bytes are bit-identical to the Python path
-    (same candidate order and strict-less tie-break)."""
+    Returns (nbits, buf bytes of ceil(nbits/8), offsets int64[n+1]), or None
+    if the kernel is unavailable. Output bytes are bit-identical to the
+    Python spec (same candidate order and strict-less tie-break)."""
     lib = get_lib()
     if lib is None:
         return None
@@ -194,46 +200,36 @@ def encode_segment(
     list_offsets = np.ascontiguousarray(list_offsets, dtype=np.int64)
     n = len(list_offsets) - 1
     out_offsets = np.empty(n + 1, dtype=np.int64)
-    cap = max(2 * values.nbytes + 8 * n + 1024, 4096)
-    for _ in range(4):
+
+    def call(cap):
         buf = np.zeros(cap, dtype=np.uint8)
         rc = lib.bvg_encode_segment(
             values.ctypes.data_as(_i32p),
             list_offsets.ctypes.data_as(_i64p),
             n,
             first_src,
-            p.window_size,
-            p.max_ref_count,
-            p.min_interval_length,
-            p.zeta_k,
-            p.outdegree_code,
-            p.reference_code,
-            p.block_count_code,
-            p.block_code,
-            p.residual_code,
+            *_format_args(p),
             buf.ctypes.data_as(_i8p),
             cap,
             out_offsets.ctypes.data_as(_i64p),
         )
-        if rc >= 0:
-            nbytes = (int(rc) + 7) // 8
-            return int(rc), buf[:nbytes].tobytes(), out_offsets
-        if rc < -8:
-            cap = -rc
-            continue
-        return None
-    return None
+        return rc, buf
+
+    cap = max(2 * values.nbytes + 8 * n + 1024, 4096)
+    nbits, buf = _sized(call, cap, "segment encode failed")
+    return nbits, buf[: (nbits + 7) // 8].tobytes(), out_offsets
 
 
 def encode_deltas(values: np.ndarray, prev: int, code: int, zeta_k: int):
     """Delta-encode a monotone int64 sequence (offsets stream chunk).
-    Returns (nbits, bytes of ceil(nbits/8)) or None on unavailability."""
+    Returns (nbits, bytes of ceil(nbits/8)), or None if the kernel is
+    unavailable."""
     lib = get_lib()
     if lib is None:
         return None
     values = np.ascontiguousarray(values, dtype=np.int64)
-    cap = max(4 * len(values) + 64, 1024)
-    for _ in range(4):
+
+    def call(cap):
         buf = np.zeros(cap, dtype=np.uint8)
         rc = lib.bvg_encode_deltas(
             values.ctypes.data_as(_i64p),
@@ -244,31 +240,29 @@ def encode_deltas(values: np.ndarray, prev: int, code: int, zeta_k: int):
             buf.ctypes.data_as(_i8p),
             cap,
         )
-        if rc >= 0:
-            return int(rc), buf[: (int(rc) + 7) // 8].tobytes()
-        if rc < -8:
-            cap = -rc
-            continue
-        return None
-    return None
+        return rc, buf
+
+    cap = max(4 * len(values) + 64, 1024)
+    nbits, buf = _sized(call, cap, "offsets encode failed (non-monotone input?)")
+    return nbits, buf[: (nbits + 7) // 8].tobytes()
 
 
 def decode_offsets(offsets_bytes_padded: bytes, count: int, code: int, zeta_k: int):
     """Cumulative-sum fold of a delta-coded offsets stream.
 
-    Returns the offsets array, or None ONLY when the kernel is
-    unavailable (caller falls back to the pure-Python reader). Kernel-
-    DETECTED corruption raises: falling back would let the Python path
-    silently decode zero-padding past a truncated stream into garbage
-    offsets, defeating the detection."""
+    Returns the offsets array, or None if the kernel is unavailable.
+    Kernel-detected corruption raises ``ValueError``."""
     lib = get_lib()
     if lib is None:
         return None
-    data = _borrow_u8p(offsets_bytes_padded)
-    data_bytes = len(offsets_bytes_padded) - 16  # bitio._PAD length
     out = np.empty(count, dtype=np.int64)
     rc = lib.bvg_decode_offsets(
-        data, data_bytes, count, code, zeta_k, out.ctypes.data_as(_i64p)
+        _borrow_u8p(offsets_bytes_padded),
+        len(offsets_bytes_padded) - 16,  # bitio._PAD length
+        count,
+        code,
+        zeta_k,
+        out.ctypes.data_as(_i64p),
     )
     if rc != 0:
         raise ValueError(

@@ -15,129 +15,47 @@ starts (HdfsBVGraph.java:221-229).
 Scale design — executor-parallel write, two jobs:
 
 1. **Encode** (per partition, ``mapInArrow``): rows stay columnar from
-   the scan to the C kernel — each task gathers its range group(s) with
+   the scan to the encoder — each task gathers its range group(s) with
    Arrow ``take``, hands the list column's CSR buffers (flat values +
-   offsets) straight to ``encode_segment_csr``, spills the raw graph
-   bits to the segment store AND delta-encodes its offsets-stream chunk
-   right away (the chunk's codes are pure successive differences —
-   independent of where the segment lands in the final stream — so it
-   needs no base; optimization r17, guide §1.2); only (first_src,
-   nbits, arcs, onbits) — a few longs per segment — return to the
-   driver, which prefix-sums nbits/onbits into each segment's absolute
-   bit base in both streams.
-2. **Re-phase** (per segment): knowing both base phases (base % 8),
-   each task shifts its raw graph bits AND its offsets-chunk bits with
-   one vectorized NumPy pass each into the byte-aligned *interior* of
-   their final byte ranges and stores them as part blobs, returning
-   just the head/tail partial-byte bits of both streams.
+   offsets) straight to ``codec.encode_segment_csr``, and spills two
+   chunks to the segment store: the raw graph bits, and the
+   ``codec.encode_offsets`` coding of the segment's node bit positions.
+   The offsets chunk is base-independent (its codes are successive
+   differences), so it is final as encoded. Only (first_src, nbits, arcs,
+   onbits) — a few longs per segment — return to the driver, which
+   prefix-sums nbits/onbits into each chunk's absolute bit base in both
+   streams.
+2. **Re-phase** (per segment): knowing each chunk's base phase (base %
+   8), one task per segment shifts its graph chunk and its offsets chunk
+   with one vectorized NumPy pass each into the byte-aligned *interior*
+   of their final byte ranges and stores them as part blobs, returning
+   just the head/tail partial-byte bits.
 
-The driver then *composes*: per segment it writes ONE boundary byte
-(merging the previous tail with the next head) and splices the interior
-part — no per-byte Python work, and driver-side Python object traffic is
-O(n_segments), independent of graph size. WHERE the intermediate
-artifacts live and HOW the final stream is assembled are pluggable
-(``storage.SegmentStore`` / the composer objects): the default
+The driver then *composes* each stream: per chunk it writes ONE boundary
+byte (merging the previous tail with the next head) and splices the
+interior part — no per-byte Python work, and driver-side Python object
+traffic is O(n_segments), independent of graph size. WHERE the
+intermediate artifacts live and HOW the final stream is assembled are
+pluggable (``storage.SegmentStore`` / the composer objects): the default
 ``LocalFSStore`` + ``FileComposer`` needs a filesystem shared by tasks
 and driver (local mode, NFS, mounted object storage); on plain object
 storage the same plan runs with a blob-store ``SegmentStore`` and
 ``MultipartComposer`` — interiors are byte-aligned by construction, so
-the final object is a server-side multipart concatenation. Segments
-smaller than two bytes (never produced by the >=64-node range planner,
-but handled) fall back to inline bit appends.
+the final object is a server-side multipart concatenation. Chunks
+shorter than two bytes (never produced by the >=64-node range planner,
+except the offsets stream's one-entry head) are appended inline as
+literal bits.
 """
 
 from __future__ import annotations
 
-import io
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .bitio import BitWriter
-from .codec import BVGraphFiles, encode_graph, encode_segment_csr
+from .codec import BVGraphFiles, encode_graph, encode_offsets, encode_segment_csr
 from .io import write_bytes
 from .properties import BVGraphProperties, format_properties
 from .storage import FileComposer, SegmentStore, store_for
-
-
-def _append_deltas(out: "_BitStreamOut", values, prev: int, p) -> None:
-    """Append code(values[i] - previous) for a monotone chunk — C kernel
-    when available, BitWriter fallback; either way the bits land on `out`
-    via vectorized re-phasing, not a per-code driver loop."""
-    from . import native
-
-    import numpy as np
-
-    arr = np.asarray(values, dtype=np.int64)
-    res = native.encode_deltas(arr, prev, p.offset_code, p.zeta_k)
-    if res is None:
-        w = BitWriter()
-        wr = w.make_writer(p.offset_code, p.zeta_k)
-        last = prev
-        for v in values:
-            wr(int(v) - last)
-            last = int(v)
-        res = w.nbits, w.to_bytes()
-    nbits, body = res
-    fill = nbits % 8
-    out.append_body(body[: nbits // 8])
-    if fill:
-        out.append_bits(body[-1] >> (8 - fill), fill)
-
-
-class _BitStreamOut:
-    """Append bit-streams of arbitrary length to a file handle, tracking a
-    sub-byte cursor. Byte bodies are re-phased with a vectorized shift."""
-
-    __slots__ = ("fh", "cur", "fill", "nbits")
-
-    def __init__(self, fh):
-        self.fh = fh
-        self.cur = 0  # low `fill` bits = next bits of the stream
-        self.fill = 0
-        self.nbits = 0
-
-    def append_body(self, body: bytes) -> None:
-        """Append len(body)*8 bits (the complete bytes of a segment)."""
-        if not body:
-            return
-        k = self.fill
-        if k == 0:
-            self.fh.write(body)
-        else:
-            import numpy as np
-
-            arr = np.frombuffer(body, dtype=np.uint8)
-            x = arr.astype(np.uint16)
-            prev = np.empty(len(arr), dtype=np.uint16)
-            prev[0] = self.cur
-            prev[1:] = x[:-1]
-            out = (((prev << (8 - k)) | (x >> k)) & 0xFF).astype(np.uint8)
-            self.fh.write(out.tobytes())
-            self.cur = int(arr[-1]) & ((1 << k) - 1)
-        self.nbits += 8 * len(body)
-
-    def append_bits(self, val: int, nb: int) -> None:
-        """Append nb (< 64) bits — a segment's trailing partial byte."""
-        if nb == 0:
-            return
-        cur = (self.cur << nb) | (val & ((1 << nb) - 1))
-        fill = self.fill + nb
-        out = bytearray()
-        while fill >= 8:
-            fill -= 8
-            out.append((cur >> fill) & 0xFF)
-        if out:
-            self.fh.write(bytes(out))
-        self.cur = cur & ((1 << fill) - 1)
-        self.fill = fill
-        self.nbits += nb
-
-    def close(self) -> None:
-        if self.fill:
-            self.fh.write(bytes([(self.cur << (8 - self.fill)) & 0xFF]))
-            self.cur = 0
-            self.fill = 0
 
 
 def _rephase_interior(raw: bytes, nbits: int, k: int):
@@ -176,6 +94,43 @@ def _rephase_interior(raw: bytes, nbits: int, k: int):
     return head, interior, tail, tail_fill
 
 
+def _rephase(store: SegmentStore, stem: str, base: int, nbits: int):
+    """Re-phase the spilled chunk ``<stem>.raw`` (``nbits`` long) to its
+    absolute bit ``base``: store the byte-aligned interior as
+    ``<stem>.part`` and return the compose record
+    ``(stem, head, raw_inline, nbits, tail, tail_fill)``. A chunk under 16
+    bits has no interior; its record carries the raw bytes inline."""
+    raw = store.get(stem + ".raw")
+    if nbits < 16:
+        return (stem, 0, raw, nbits, 0, 0)
+    head, interior, tail, tail_fill = _rephase_interior(raw, nbits, base % 8)
+    store.put(stem + ".part", interior)
+    return (stem, head, None, nbits, tail, tail_fill)
+
+
+def _segment_bases(meta, n: int, n0bits: int):
+    """Validate that the segments' src ranges chain to exactly 0..n-1 and
+    prefix-sum each segment's bit base in both streams (the offsets
+    stream starts after its ``n0bits``-long node-0 entry). Returns the
+    re-phase tasks ``(idx, base, nbits, obase, onbits)``."""
+    tasks = []
+    expected_next, base, obase = 0, 0, n0bits
+    for idx, first_src, nodes, _arcs, nbits, onbits in meta:
+        if first_src != expected_next:
+            raise ValueError(
+                f"non-contiguous src ranges: expected {expected_next}, got {first_src}"
+            )
+        expected_next = first_src + nodes
+        tasks.append((idx, base, nbits, obase, onbits))
+        base += nbits
+        obase += onbits
+    if expected_next != n:
+        raise ValueError(
+            f"src not dense 0..{n - 1}: the rows cover 0..{expected_next - 1}"
+        )
+    return tasks
+
+
 def write_bvgraph(
     df: DataFrame,
     basename: str,
@@ -195,10 +150,10 @@ def write_bvgraph(
     overwrites cleanly.
 
     Executor-parallel encode AND write (module docstring): job 1 encodes
-    window-isolated segments into ``store``; job 2 re-phases each segment
-    to its absolute bit base and stores its byte-aligned interior plus
-    its offsets-stream chunk; the driver composes boundary bytes and
-    splices parts in order.
+    window-isolated segments and their offsets-stream chunks into
+    ``store``; job 2 re-phases both chunks of each segment to their
+    absolute bit bases and stores their byte-aligned interiors; the
+    driver composes boundary bytes and splices parts in order.
 
     Topology contract: ``store`` defaults to ``storage.store_for(basename)``
     — a plain path or ``file://`` basename spills to a ``LocalFSStore``
@@ -211,7 +166,9 @@ def write_bvgraph(
     ``n_nodes``: pass the (dense) node count when the caller already
     knows it — e.g. from the source graph's ``.properties`` — to skip
     the ``df.count()`` job, which for a graph-source input is a full
-    second decode of the graph just to size the segments.
+    second decode of the graph just to size the segments. If the rows'
+    src values do not chain to exactly 0..n_nodes-1, ``ValueError`` is
+    raised before any output file is written.
 
     ``aligned``: the graph→graph copy fast path. When the input is
     ALREADY partitioned into ascending contiguous src ranges — true for
@@ -222,10 +179,10 @@ def write_bvgraph(
     segment id and encodes in place (job 1 becomes shuffle-free, a
     mapInArrow over the scan), which at 100 TB removes the single
     biggest data movement of a copy/transcode job. Misuse is safe, not
-    silent: each task asserts its rows form one consecutive src run,
-    and the driver's existing density check asserts the per-partition
-    ranges chain to exactly 0..n-1 — a hash-partitioned input fails
-    loudly before any file is composed.
+    silent: each task checks that its rows form one consecutive src run,
+    and the driver checks that the per-partition ranges chain to exactly
+    0..n-1 — a hash-partitioned input fails loudly before any file is
+    composed.
     """
     n = int(n_nodes) if n_nodes is not None else df.count()
     spark = df.sparkSession
@@ -301,25 +258,15 @@ def write_bvgraph(
                     f"{len(seg_src)} rows"
                 )
             p = BVGraphProperties(nodes=len(lens), arcs=0, **props_template)
-            # C kernel when available, Python spec otherwise — bit-identical
-            # either way (refs stay inside this segment: window isolation)
+            # refs stay inside this segment: window isolation
             nbits, buf, offsets = encode_segment_csr(
                 values, list_offsets, first_src, p
             )
-            store.put(f"seg-{int(pid):05d}.raw", bytes(buf[: (nbits + 7) // 8]))
-            # offsets-stream chunk, encoded HERE (not in the re-phase
-            # job): segment-local offsets start at 0 and the chunk's
-            # codes are successive differences, so the bits are
-            # base-independent — bit-identical to the old
-            # prev=seg_base encode, one job earlier. offset_code and
-            # zeta_k come from props_template, never from `nodes`, so
-            # this per-task `p` encodes exactly as the driver's p0.
-            ow = io.BytesIO()
-            oout = _BitStreamOut(ow)
-            _append_deltas(oout, offsets[1:], 0, p)
-            onbits = oout.nbits
-            oout.close()
-            store.put(f"seg-{int(pid):05d}.offs.raw", ow.getvalue())
+            store.put(f"seg-{int(pid):05d}.raw", buf)
+            # offset_code and zeta_k come from props_template, never from
+            # `nodes`, so this per-task `p` codes exactly like the driver's
+            onbits, obuf = encode_offsets(offsets[1:], p)
+            store.put(f"seg-{int(pid):05d}.offs.raw", obuf)
             meta["pid"].append(int(pid))
             meta["first_src"].append(first_src)
             meta["nodes"].append(len(lens))
@@ -350,63 +297,32 @@ def write_bvgraph(
         (r.pid, r.first_src, r.nodes, r.arcs, r.nbits, r.onbits) for r in meta_rows
     )
 
-    # prefix-sum the bit bases of BOTH streams (job 1 reports each
-    # chunk's bit length, so the offsets stream no longer needs its own
-    # re-phase job); verify src density/contiguity
     p0 = BVGraphProperties(nodes=max(n, 1), arcs=0, **props_template)
-    entry0, n0bits = _encode_offsets_entry0(p0)
-    expected_next = 0
-    bases: dict[int, int] = {}
-    obases: dict[int, int] = {}
-    base = 0
-    obase = n0bits
-    for idx, first_src, nodes, arcs, nbits, onbits in meta:
-        assert first_src == expected_next, (
-            f"non-contiguous src ranges: expected {expected_next}, got {first_src}"
-        )
-        expected_next = first_src + nodes
-        bases[idx] = base
-        base += nbits
-        obases[idx] = obase
-        obase += onbits
-    assert expected_next == n, f"src not dense 0..{n - 1}"
+    n0bits, entry0 = encode_offsets([0], p0)
+    tasks = _segment_bases(meta, n, n0bits)
     arcs_total = sum(m[3] for m in meta)
 
     def rephase_segment(task):
-        idx, seg_base, nbits, ob, onbits = task
-        raw = store.get(f"seg-{idx:05d}.raw")
-        if nbits < 16:  # degenerate micro-segment: driver appends inline
-            g = (idx, 0, raw, nbits, 0, 0)
-        else:
-            head, interior, tail, tail_fill = _rephase_interior(
-                raw, nbits, seg_base % 8
-            )
-            store.put(f"seg-{idx:05d}.part", interior)
-            g = (idx, head, None, nbits, tail, tail_fill)
-        return g, _rephase_offsets_one((idx, ob, onbits), store)
+        idx, base, nbits, obase, onbits = task
+        return (
+            _rephase(store, f"seg-{idx:05d}", base, nbits),
+            _rephase(store, f"seg-{idx:05d}.offs", obase, onbits),
+        )
 
-    # Job 2: re-phase + part write for BOTH streams, one task per
-    # segment (jobs 2+3 merged — optimization r17, guide §1.2: the
-    # offsets chunk lengths are known from job 1, so the old job 3's
-    # only input, the chunk bit-base prefix sums, is available here).
-    tasks = [
-        (idx, bases[idx], nbits, obases[idx], onbits)
-        for idx, _, _, _, nbits, onbits in meta
-    ]
-    merged = sorted(
+    # Job 2: re-phase + part write for both streams, one task per segment
+    # (collect keeps the tasks' segment order)
+    merged = (
         spark.sparkContext.parallelize(tasks, max(len(tasks), 1))
         .map(rephase_segment)
         .collect()
     )
-    seg_results = [g for g, _o in merged]
-    oseg_results = [o for _g, o in merged]
 
     graph_composer = FileComposer(basename + ".graph", store)
-    compose_graph(seg_results, store, graph_composer)
+    compose_graph([g for g, _ in merged], graph_composer)
     graph_composer.close()
 
     offs_composer = FileComposer(basename + ".offsets", store)
-    compose_offsets(oseg_results, entry0, n0bits, store, offs_composer)
+    compose_offsets([o for _, o in merged], entry0, n0bits, offs_composer)
     offs_composer.close()
 
     store.cleanup()
@@ -415,86 +331,42 @@ def write_bvgraph(
     return p
 
 
-def compose_graph(seg_results, store: SegmentStore, composer) -> None:
-    """Compose .graph from re-phased segments: per segment ONE boundary
-    byte + a splice of the byte-aligned interior part. Literal bytes go
-    through ``composer.write`` (via the bit-phase tracker), interiors via
-    ``composer.part`` — so Python-side byte traffic is O(n_segments) with
-    a FileComposer, and zero part bytes with a MultipartComposer (the
-    object-storage compose resolves part keys server-side)."""
-    out = _BitStreamOut(composer)
-    for rec in seg_results:
-        # 6-tuple from the merged re-phase job (one contract — ADVICE r17)
-        idx, head, raw_inline, nbits, tail, tail_fill = rec
-        if raw_inline is not None:  # micro-segment fallback
-            fill = nbits % 8
-            out.append_body(raw_inline[: nbits // 8])
-            if fill:
-                out.append_bits(raw_inline[-1] >> (8 - fill), fill)
-            continue
-        k = out.fill
-        if k:
-            out.append_bits(head, 8 - k)  # completes the boundary byte
-        assert out.fill == 0
-        out.nbits += 8 * composer.part(f"seg-{idx:05d}.part")
-        out.cur, out.fill = tail, tail_fill
-        out.nbits += tail_fill
-    out.close()
+def _compose(records, composer) -> None:
+    """Compose one stream from re-phased chunk records
+    ``(stem, head, raw_inline, nbits, tail, tail_fill)`` (see ``_rephase``):
+    per chunk ONE boundary byte through ``composer.write``, then a splice
+    of its byte-aligned interior via ``composer.part`` — so Python-side
+    byte traffic is O(n_chunks) with a FileComposer, and zero part bytes
+    with a MultipartComposer (the object-storage compose resolves part
+    keys server-side). Inline records append their literal bits."""
+    cur, fill = 0, 0  # the low `fill` bits of `cur`: pending output bits
+    for stem, head, raw_inline, nbits, tail, tail_fill in records:
+        if raw_inline is not None:
+            val = int.from_bytes(raw_inline, "big") >> (8 * len(raw_inline) - nbits)
+            nb = nbits
+        else:
+            val, nb = head, (8 - fill) % 8  # completes the boundary byte
+        cur, fill = (cur << nb) | val, fill + nb
+        if fill >= 8:
+            composer.write((cur >> (fill % 8)).to_bytes(fill // 8, "big"))
+            fill %= 8
+            cur &= (1 << fill) - 1
+        if raw_inline is None:
+            composer.part(stem + ".part")
+            cur, fill = tail, tail_fill
+    if fill:
+        composer.write(bytes([(cur << (8 - fill)) & 0xFF]))
 
 
-def _encode_offsets_entry0(p0) -> tuple[bytes, int]:
-    """Driver-side encode of the offsets stream's node-0 entry (a few
-    bits); its exact bit length anchors the chunk bit-base prefix sums."""
-    ow = io.BytesIO()
-    o = _BitStreamOut(ow)
-    _append_deltas(o, [0], 0, p0)
-    n0 = o.nbits
-    o.close()
-    return ow.getvalue(), n0
+def compose_graph(seg_results, composer) -> None:
+    """Compose ``.graph`` from the segments' re-phased graph chunks."""
+    _compose(seg_results, composer)
 
 
-def _rephase_offsets_one(task, store: SegmentStore):
-    """Executor-side re-phase of one segment's offsets chunk to its
-    absolute bit base (job 3's map function; module-level so the compose
-    tests run it without a Spark job)."""
-    idx, obase, onbits = task
-    raw = store.get(f"seg-{idx:05d}.offs.raw")
-    if onbits < 16:  # micro-chunk: driver appends the literal bits inline
-        return (idx, 0, raw, onbits, 0, 0)
-    head, interior, tail, tail_fill = _rephase_interior(raw, onbits, obase % 8)
-    store.put(f"seg-{idx:05d}.offs.part", interior)
-    return (idx, head, None, onbits, tail, tail_fill)
-
-
-def compose_offsets(
-    oseg_results, entry0: bytes, n0bits: int, store: SegmentStore, composer
-) -> None:
-    """Compose .offsets exactly like compose_graph: the driver writes the
-    node-0 entry bits plus ONE boundary byte per segment; the
-    byte-aligned chunk interiors (re-phased executor-side by job 3) are
-    spliced via ``composer.part`` — driver byte traffic is O(n_segments)
-    for this stream too, instead of shifting every chunk byte through
-    the driver's vectorized appender."""
-    out = _BitStreamOut(composer)
-    fill0 = n0bits % 8
-    out.append_body(entry0[: n0bits // 8])
-    if fill0:
-        out.append_bits(entry0[-1] >> (8 - fill0), fill0)
-    for idx, head, raw_inline, onbits, tail, tail_fill in oseg_results:
-        if raw_inline is not None:  # micro-chunk fallback
-            f2 = onbits % 8
-            out.append_body(raw_inline[: onbits // 8])
-            if f2:
-                out.append_bits(raw_inline[-1] >> (8 - f2), f2)
-            continue
-        k = out.fill
-        if k:
-            out.append_bits(head, 8 - k)  # completes the boundary byte
-        assert out.fill == 0
-        out.nbits += 8 * composer.part(f"seg-{idx:05d}.offs.part")
-        out.cur, out.fill = tail, tail_fill
-        out.nbits += tail_fill
-    out.close()
+def compose_offsets(oseg_results, entry0: bytes, n0bits: int, composer) -> None:
+    """Compose ``.offsets``: the node-0 entry (``n0bits`` bits of
+    ``entry0``), then the segments' re-phased offsets chunks."""
+    _compose([(None, 0, entry0, n0bits, 0, 0), *oseg_results], composer)
 
 
 def copy_bvgraph(

@@ -24,9 +24,9 @@ The final assembly likewise has two strategies behind one interface:
   list and resolving it against the store; a real implementation would
   issue the multipart calls instead.
 
-Both composers expose ``write`` (file-like, consumed by the sink's
-``_BitStreamOut`` bit-phase tracker) for literal bytes and ``part(key)``
-for a spilled interior; compose tests assert byte-identical output.
+Both composers expose ``write`` (file-like, fed by the sink's compose
+with boundary bytes) for literal bytes and ``part(key)`` for a spilled
+interior; compose tests assert byte-identical output.
 """
 
 from __future__ import annotations

@@ -141,3 +141,26 @@ def test_bad_properties_rejected():
         parse_properties(
             "graphclass=it.unimi.dsi.webgraph.BVGraph\nversion=99\nnodes=1\narcs=0\n"
         )
+
+
+def test_encode_graph_rebuilds_committed_fixture():
+    """``encode_graph`` (one kernel-encoded segment) reproduces the
+    committed small fixture bit for bit from its generator."""
+    import importlib.util
+    import os
+
+    from hadoopwebgraph_spark.queries.graph import SMALL_BASENAME
+
+    gen_path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts",
+        "gen_graph_fixture.py",
+    )
+    spec = importlib.util.spec_from_file_location("gen_graph_fixture", gen_path)
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    g, o, _ = encode_graph(gen.gen_adjacency(2000, 42))
+    with open(SMALL_BASENAME + ".graph", "rb") as f:
+        assert g == f.read()
+    with open(SMALL_BASENAME + ".offsets", "rb") as f:
+        assert o == f.read()

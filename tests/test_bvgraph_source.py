@@ -45,12 +45,20 @@ def test_in_filter_prunes_between_points(spark, twin):
     assert out == {k: twin[k] for k in (5, 1900)}
 
 
-def test_corrupt_graph_fails_loudly(spark, twin, tmp_path):
-    """A truncated .graph must raise (both decode paths), never hang on
-    the zero padding or silently return short results."""
-    import shutil
+def _read_in_process(reader):
+    """Run the source's executor side in this process: every planned
+    partition's rows, each src exactly once."""
+    rows = {}
+    for part in reader.partitions():
+        for batch in reader.read(part):
+            for s, a in zip(batch["src"].to_pylist(), batch["adj"].to_pylist()):
+                assert s not in rows and part.from_node <= s < part.up_to
+                rows[s] = a
+    return rows
 
-    import pytest as _pytest
+
+def _truncated_copy(tmp_path) -> str:
+    import shutil
 
     base = str(tmp_path / "trunc")
     for ext in (".offsets", ".properties"):
@@ -59,22 +67,33 @@ def test_corrupt_graph_fails_loudly(spark, twin, tmp_path):
         blob = f.read()
     with open(base + ".graph", "wb") as f:
         f.write(blob[: len(blob) // 3])
-    for nonative in ("false", "true"):
-        df = (
-            spark.read.format("bvgraph")
-            .option("basename", base)
-            .option("numSplits", 4)
-            .option("nonative", nonative)
-            .load()
-        )
-        with _pytest.raises(Exception):
-            df.collect()
+    return base
+
+
+def test_corrupt_graph_fails_loudly(spark, monkeypatch, tmp_path):
+    """A truncated .graph must raise (kernel and Python spec), never hang
+    on the zero padding or silently return short results."""
+    from hadoopwebgraph_spark.bvgraph import native
+
+    base = _truncated_copy(tmp_path)
+    df = (
+        spark.read.format("bvgraph")
+        .option("basename", base)
+        .option("numSplits", 4)
+        .load()
+    )
+    with pytest.raises(Exception, match="corrupt or truncated"):
+        df.collect()
+    monkeypatch.setattr(native, "get_lib", lambda: None)
+    reader = BVGraphReader({"basename": base, "numsplits": "4"})
+    with pytest.raises(ValueError, match="corrupt or truncated"):
+        _read_in_process(reader)
 
 
 def test_truncated_offsets_raise_not_garbage(tmp_path):
     """Kernel-detected .offsets corruption must surface as an error, not
     fall back to the Python reader silently decoding zero-padding into
-    garbage offsets (ADVICE r3): decode_offsets raises on rc<0 and
+    garbage offsets: decode_offsets raises on rc<0 and
     load_offsets propagates it."""
     import pytest as _pytest
 
@@ -95,7 +114,7 @@ def test_truncated_offsets_raise_not_garbage(tmp_path):
 def test_truncated_unary_field_fails_fast():
     """A stream truncated inside a unary-coded field must error out-of-band
     (read_unary returns -1), not decode as an in-band 2^30 value that
-    drives a multi-GiB allocation (ADVICE r3)."""
+    drives a multi-GiB allocation; the kernel's error raises."""
     from hadoopwebgraph_spark.bvgraph import native
 
     lib = native.get_lib()
@@ -107,8 +126,8 @@ def test_truncated_unary_field_fails_fast():
 
     p = BVGraphProperties(nodes=1, arcs=0)
     # all-zero bytes: every unary read runs to the limit without a 1 bit
-    res = native.decode_range(b"\x00" * 4 + b"\x00" * 16, p, 0, 1)
-    assert res is None  # kernel returned an error, not a huge decode
+    with pytest.raises(ValueError, match="corrupt or truncated"):
+        native.decode_range(b"\x00" * 4 + b"\x00" * 16, p, 0, 1)
 
 
 def test_target_bytes_partition_sizing(spark, twin):
@@ -135,18 +154,18 @@ def test_target_bytes_partition_sizing(spark, twin):
     assert {r.src: list(r.adj) for r in df.collect()} == twin
 
 
-def test_python_fallback_path_matches_native(spark, twin):
-    """.option('nonative','true') forces the pure-Python decoder through
-    the full Spark source; result must equal the default (C kernel) path."""
-    df = (
-        spark.read.format("bvgraph")
-        .option("basename", SMALL_BASENAME)
-        .option("numSplits", 7)
-        .option("nonative", "true")
-        .load()
-    )
-    rows = {r.src: list(r.adj) for r in df.collect()}
-    assert rows == twin
+def test_python_fallback_path_matches_native(monkeypatch, twin):
+    """With the C kernel unavailable, the source's read decodes with the
+    Python spec; every partition, mid-graph seeded starts included, must
+    equal the parquet twin."""
+    from hadoopwebgraph_spark.bvgraph import native
+
+    monkeypatch.setattr(native, "get_lib", lambda: None)
+    for num_splits in (1, 7, 50):
+        reader = BVGraphReader(
+            {"basename": SMALL_BASENAME, "numsplits": str(num_splits)}
+        )
+        assert _read_in_process(reader) == twin, num_splits
 
 
 def test_actual_splits_le_requested(spark):
@@ -274,9 +293,9 @@ def test_ranged_reads_only_partition_extent(monkeypatch):
 
 
 def test_offset_slice_out_of_range_fails_loudly():
-    from hadoopwebgraph_spark.bvgraph.datasource import _OffsetSlice
+    from hadoopwebgraph_spark.bvgraph.codec import _OffsetSlice
 
-    s = _OffsetSlice(10, [80, 90, 100], bit_base=80)
+    s = _OffsetSlice(10, [0, 10, 20])
     assert s[10] == 0 and s[12] == 20
     import pytest as _pytest
 

@@ -115,12 +115,15 @@ def test_native_kernel_matches_python(adj, kw, flags):
 def test_native_encoder_matches_python(adj, kw, flags, first_src):
     """The C segment encoder must be BIT-IDENTICAL to the Python spec
     (same reference-candidate order and strict-less tie-break) across
-    arbitrary graphs, params, code flags, and segment start offsets."""
+    arbitrary graphs, params, code flags, and segment start offsets; so
+    must the C offsets-stream coder behind ``encode_offsets``."""
     import numpy as np
     import pytest
 
+    from unittest import mock
+
     from hadoopwebgraph_spark.bvgraph import native
-    from hadoopwebgraph_spark.bvgraph.codec import encode_segment_py
+    from hadoopwebgraph_spark.bvgraph.codec import encode_offsets, encode_segment_py
     from hadoopwebgraph_spark.bvgraph.properties import BVGraphProperties
 
     if native.get_lib() is None:
@@ -140,6 +143,10 @@ def test_native_encoder_matches_python(adj, kw, flags, first_src):
     assert res is not None
     nb_c, buf_c, off_c = res
     assert (nb_c, buf_c, off_c.tolist()) == (nb_py, buf_py, off_py)
+    # the offsets-stream coder: kernel == Python spec, bit for bit
+    native_off = encode_offsets(off_py, p)
+    with mock.patch.object(native, "get_lib", lambda: None):
+        assert encode_offsets(off_py, p) == native_off
 
 
 @settings(max_examples=200, deadline=None)
