@@ -50,7 +50,7 @@ def read_bytes_range(path: str, start: int, length: int) -> bytes:
 def open_output(path: str):
     """Writable stream for a local path or filesystem URI — the single
     place the ``'://' -> pyarrow.fs`` output branching lives (used by
-    ``write_bytes`` and the sink's ``FileComposer``)."""
+    ``write_bytes`` and the sink's compose)."""
     if "://" in path:
         filesystem, fs_path = _fs_path(path)
         return filesystem.open_output_stream(fs_path)

@@ -12,7 +12,7 @@ compression but keeps the encode embarrassingly parallel — the same
 trade the reference's *read* side makes by seeding windows at split
 starts (HdfsBVGraph.java:221-229).
 
-Scale design — executor-parallel write, two jobs:
+A write is one Spark job followed by one sequential pass on the driver:
 
 1. **Encode** (per partition, ``mapInArrow``): rows stay columnar from
    the scan to the encoder — each task gathers its range group(s) with
@@ -21,114 +21,55 @@ Scale design — executor-parallel write, two jobs:
    chunks to the segment store: the raw graph bits, and the
    ``codec.encode_offsets`` coding of the segment's node bit positions.
    The offsets chunk is base-independent (its codes are successive
-   differences), so it is final as encoded. Only (first_src, nbits, arcs,
-   onbits) — a few longs per segment — return to the driver, which
-   prefix-sums nbits/onbits into each chunk's absolute bit base in both
-   streams.
-2. **Re-phase** (per segment): knowing each chunk's base phase (base %
-   8), one task per segment shifts its graph chunk and its offsets chunk
-   with one vectorized NumPy pass each into the byte-aligned *interior*
-   of their final byte ranges and stores them as part blobs, returning
-   just the head/tail partial-byte bits.
+   differences), so it is final as encoded. Only (first_src, nodes,
+   arcs, nbits, onbits) per segment return to the driver.
+2. **Compose** (driver, like the reference's ``writeOffsets``): for each
+   stream, the driver reads the chunks back in src order and appends
+   each one at the stream's current bit phase — one vectorized uint8
+   shift per chunk, the partial last byte carried into the next chunk.
+   The ``.offsets`` stream starts with the node-0 entry as its first
+   pending bits.
 
-The driver then *composes* each stream: per chunk it writes ONE boundary
-byte (merging the previous tail with the next head) and splices the
-interior part — no per-byte Python work, and driver-side Python object
-traffic is O(n_segments), independent of graph size. WHERE the
-intermediate artifacts live and HOW the final stream is assembled are
-pluggable (``storage.SegmentStore`` / the composer objects): the default
-``LocalFSStore`` + ``FileComposer`` needs a filesystem shared by tasks
-and driver (local mode, NFS, mounted object storage); on plain object
-storage the same plan runs with a blob-store ``SegmentStore`` and
-``MultipartComposer`` — interiors are byte-aligned by construction, so
-the final object is a server-side multipart concatenation. Chunks
-shorter than two bytes (never produced by the >=64-node range planner,
-except the offsets stream's one-entry head) are appended inline as
-literal bits.
+WHERE the spilled chunks live is pluggable (``storage.SegmentStore``):
+``LocalFSStore`` needs a filesystem shared by tasks and driver (local
+mode, NFS, mounted object storage); ``PyArrowFSStore`` serves
+``s3://``/``gs://``/``hdfs://`` outputs. Every stream byte passes through
+the driver once on the way out.
 """
 
 from __future__ import annotations
 
+from itertools import chain
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .codec import BVGraphFiles, encode_graph, encode_offsets, encode_segment_csr
-from .io import write_bytes
+from .codec import encode_offsets, encode_segment_csr
+from .io import open_output, write_bytes
 from .properties import BVGraphProperties, format_properties
-from .storage import FileComposer, SegmentStore, store_for
+from .storage import SegmentStore, store_for
 
 
-def _rephase_interior(raw: bytes, nbits: int, k: int):
-    """Shift a segment's raw bits (packed from bit 0, pad-low) to start at
-    bit phase ``k`` of the output stream. Returns (head, interior_bytes,
-    tail, tail_fill): ``head`` = the first (8-k)%8 bits (completing the
-    boundary byte), ``interior_bytes`` = all complete output bytes, and
-    ``tail``/``tail_fill`` = the trailing partial byte's bits. One
-    vectorized NumPy pass, no per-byte Python loop."""
-    import numpy as np
-
-    r = np.frombuffer(raw, dtype=np.uint8)
-    end = k + nbits  # relative bit extent in the output
-    tail_fill = end % 8
-    if k == 0:
-        head = 0
-        interior = raw[: nbits // 8]
-    else:
-        head = int(r[0]) >> k
-        n_int = end // 8 - 1
-        if n_int > 0:
-            pad = np.concatenate([r, np.zeros(1, dtype=np.uint8)])
-            x = pad.astype(np.uint16)
-            out = ((x[:n_int] << (8 - k)) | (x[1 : n_int + 1] >> k)) & 0xFF
-            interior = out.astype(np.uint8).tobytes()
-        else:
-            interior = b""
-    if tail_fill:
-        m = len(raw)
-        v = ((int(r[m - 2]) << 8) if m >= 2 else 0) | int(r[m - 1])
-        raw_fill = nbits % 8
-        v >>= (8 - raw_fill) if raw_fill else 0  # drop pad-low bits
-        tail = v & ((1 << tail_fill) - 1)
-    else:
-        tail = 0
-    return head, interior, tail, tail_fill
-
-
-def _rephase(store: SegmentStore, stem: str, base: int, nbits: int):
-    """Re-phase the spilled chunk ``<stem>.raw`` (``nbits`` long) to its
-    absolute bit ``base``: store the byte-aligned interior as
-    ``<stem>.part`` and return the compose record
-    ``(stem, head, raw_inline, nbits, tail, tail_fill)``. A chunk under 16
-    bits has no interior; its record carries the raw bytes inline."""
-    raw = store.get(stem + ".raw")
-    if nbits < 16:
-        return (stem, 0, raw, nbits, 0, 0)
-    head, interior, tail, tail_fill = _rephase_interior(raw, nbits, base % 8)
-    store.put(stem + ".part", interior)
-    return (stem, head, None, nbits, tail, tail_fill)
-
-
-def _segment_bases(meta, n: int, n0bits: int):
+def _segment_chunks(meta, n: int):
     """Validate that the segments' src ranges chain to exactly 0..n-1 and
-    prefix-sum each segment's bit base in both streams (the offsets
-    stream starts after its ``n0bits``-long node-0 entry). Returns the
-    re-phase tasks ``(idx, base, nbits, obase, onbits)``."""
-    tasks = []
-    expected_next, base, obase = 0, 0, n0bits
+    return the spilled chunks in stream order as two ``(key, nbits)``
+    lists: the graph chunks and the offsets chunks."""
+    graph, offsets = [], []
+    expected_next = 0
     for idx, first_src, nodes, _arcs, nbits, onbits in meta:
         if first_src != expected_next:
             raise ValueError(
                 f"non-contiguous src ranges: expected {expected_next}, got {first_src}"
             )
         expected_next = first_src + nodes
-        tasks.append((idx, base, nbits, obase, onbits))
-        base += nbits
-        obase += onbits
+        graph.append((f"seg-{idx:05d}.raw", nbits))
+        offsets.append((f"seg-{idx:05d}.offs.raw", onbits))
     if expected_next != n:
         raise ValueError(
             f"src not dense 0..{n - 1}: the rows cover 0..{expected_next - 1}"
         )
-    return tasks
+    return graph, offsets
 
 
 def write_bvgraph(
@@ -149,11 +90,11 @@ def write_bvgraph(
     leaves a triple no reader will load, and a retry truncates and
     overwrites cleanly.
 
-    Executor-parallel encode AND write (module docstring): job 1 encodes
-    window-isolated segments and their offsets-stream chunks into
-    ``store``; job 2 re-phases both chunks of each segment to their
-    absolute bit bases and stores their byte-aligned interiors; the
-    driver composes boundary bytes and splices parts in order.
+    One encode job, then a sequential compose (module docstring): the
+    job encodes window-isolated segments and their offsets-stream chunks
+    into ``store``; the driver appends the chunks in src order at each
+    stream's bit phase. The spilled chunks are removed on every exit
+    path, failed writes included.
 
     Topology contract: ``store`` defaults to ``storage.store_for(basename)``
     — a plain path or ``file://`` basename spills to a ``LocalFSStore``
@@ -176,7 +117,7 @@ def write_bvgraph(
     hands each partition one node range — the re-segmentation shuffle
     is pure waste: each input partition IS a valid encode segment. With
     ``aligned=True`` the sink uses ``spark_partition_id()`` as the
-    segment id and encodes in place (job 1 becomes shuffle-free, a
+    segment id and encodes in place (the encode job is shuffle-free, a
     mapInArrow over the scan), which at 100 TB removes the single
     biggest data movement of a copy/transcode job. Misuse is safe, not
     silent: each task checks that its rows form one consecutive src run,
@@ -219,7 +160,6 @@ def write_bvgraph(
         ).repartition(n_parts, "pid")
 
     def encode_batches(batches):
-        import numpy as np
         import pyarrow as pa
 
         batches = [b for b in batches if b.num_rows]
@@ -287,86 +227,80 @@ def write_bvgraph(
             ),
         )
 
-    # Job 1: encode (Arrow-batched end-to-end). Only a few longs per
+    # The encode job (Arrow-batched end-to-end). Only a few longs per
     # segment come back to the driver.
-    meta_rows = ranged.mapInArrow(
-        encode_batches,
-        "pid int, first_src long, nodes long, arcs long, nbits long, onbits long",
-    ).collect()
-    meta = sorted(
-        (r.pid, r.first_src, r.nodes, r.arcs, r.nbits, r.onbits) for r in meta_rows
-    )
-
-    p0 = BVGraphProperties(nodes=max(n, 1), arcs=0, **props_template)
-    n0bits, entry0 = encode_offsets([0], p0)
-    tasks = _segment_bases(meta, n, n0bits)
-    arcs_total = sum(m[3] for m in meta)
-
-    def rephase_segment(task):
-        idx, base, nbits, obase, onbits = task
-        return (
-            _rephase(store, f"seg-{idx:05d}", base, nbits),
-            _rephase(store, f"seg-{idx:05d}.offs", obase, onbits),
+    try:
+        meta_rows = ranged.mapInArrow(
+            encode_batches,
+            "pid int, first_src long, nodes long, arcs long, nbits long, onbits long",
+        ).collect()
+        meta = sorted(
+            (r.pid, r.first_src, r.nodes, r.arcs, r.nbits, r.onbits)
+            for r in meta_rows
         )
+        graph_chunks, offsets_chunks = _segment_chunks(meta, n)
 
-    # Job 2: re-phase + part write for both streams, one task per segment
-    # (collect keeps the tasks' segment order)
-    merged = (
-        spark.sparkContext.parallelize(tasks, max(len(tasks), 1))
-        .map(rephase_segment)
-        .collect()
-    )
+        p0 = BVGraphProperties(nodes=max(n, 1), arcs=0, **props_template)
+        n0bits, entry0 = encode_offsets([0], p0)
+        with open_output(basename + ".graph") as out:
+            compose_graph(graph_chunks, store, out)
+        with open_output(basename + ".offsets") as out:
+            compose_offsets(offsets_chunks, store, out, entry0, n0bits)
 
-    graph_composer = FileComposer(basename + ".graph", store)
-    compose_graph([g for g, _ in merged], graph_composer)
-    graph_composer.close()
-
-    offs_composer = FileComposer(basename + ".offsets", store)
-    compose_offsets([o for _, o in merged], entry0, n0bits, offs_composer)
-    offs_composer.close()
-
-    store.cleanup()
-    p = BVGraphProperties(nodes=n, arcs=arcs_total, **props_template)
-    write_bytes(basename + ".properties", format_properties(p).encode("utf-8"))
-    return p
+        arcs_total = sum(m[3] for m in meta)
+        p = BVGraphProperties(nodes=n, arcs=arcs_total, **props_template)
+        write_bytes(basename + ".properties", format_properties(p).encode("utf-8"))
+        return p
+    finally:
+        store.cleanup()
 
 
-def _compose(records, composer) -> None:
-    """Compose one stream from re-phased chunk records
-    ``(stem, head, raw_inline, nbits, tail, tail_fill)`` (see ``_rephase``):
-    per chunk ONE boundary byte through ``composer.write``, then a splice
-    of its byte-aligned interior via ``composer.part`` — so Python-side
-    byte traffic is O(n_chunks) with a FileComposer, and zero part bytes
-    with a MultipartComposer (the object-storage compose resolves part
-    keys server-side). Inline records append their literal bits."""
-    cur, fill = 0, 0  # the low `fill` bits of `cur`: pending output bits
-    for stem, head, raw_inline, nbits, tail, tail_fill in records:
-        if raw_inline is not None:
-            val = int.from_bytes(raw_inline, "big") >> (8 * len(raw_inline) - nbits)
-            nb = nbits
-        else:
-            val, nb = head, (8 - fill) % 8  # completes the boundary byte
-        cur, fill = (cur << nb) | val, fill + nb
-        if fill >= 8:
-            composer.write((cur >> (fill % 8)).to_bytes(fill // 8, "big"))
-            fill %= 8
-            cur &= (1 << fill) - 1
-        if raw_inline is None:
-            composer.part(stem + ".part")
-            cur, fill = tail, tail_fill
+def _shift(raw: bytes, nbits: int, cur: int, fill: int):
+    """Append the first ``nbits`` bits of ``raw`` (MSB first) to ``fill``
+    pending bits ``cur``. Returns (the complete output bytes, the new
+    pending bits, their count) — one vectorized uint8 pass: a uint8
+    ``<<`` drops the bits that move into the previous byte."""
+    total = fill + nbits
+    if fill == 0:
+        whole = memoryview(raw)[: total // 8]
+        last = raw[total // 8] if total % 8 else 0
+    else:
+        r = np.frombuffer(raw, dtype=np.uint8)
+        out = np.empty(len(r) + 1, dtype=np.uint8)
+        out[0] = cur << (8 - fill)
+        np.left_shift(r, 8 - fill, out=out[1:])
+        out[:-1] |= r >> fill
+        whole = out[: total // 8]
+        last = int(out[total // 8]) if total % 8 else 0
+    return whole, last >> (8 - total % 8), total % 8
+
+
+def _compose(chunks, out) -> None:
+    """Write ``(raw, nbits)`` chunks to ``out`` as one bit stream, the
+    last byte padded with zero bits."""
+    cur, fill = 0, 0
+    for raw, nbits in chunks:
+        whole, cur, fill = _shift(raw, nbits, cur, fill)
+        out.write(whole)
     if fill:
-        composer.write(bytes([(cur << (8 - fill)) & 0xFF]))
+        out.write(bytes([cur << (8 - fill)]))
 
 
-def compose_graph(seg_results, composer) -> None:
-    """Compose ``.graph`` from the segments' re-phased graph chunks."""
-    _compose(seg_results, composer)
+def compose_graph(chunks, store: SegmentStore, out) -> None:
+    """Compose ``.graph`` into the stream ``out`` from the ordered
+    ``(key, nbits)`` graph chunks spilled to ``store``."""
+    _compose(((store.get(key), nbits) for key, nbits in chunks), out)
 
 
-def compose_offsets(oseg_results, entry0: bytes, n0bits: int, composer) -> None:
-    """Compose ``.offsets``: the node-0 entry (``n0bits`` bits of
-    ``entry0``), then the segments' re-phased offsets chunks."""
-    _compose([(None, 0, entry0, n0bits, 0, 0), *oseg_results], composer)
+def compose_offsets(
+    chunks, store: SegmentStore, out, entry0: bytes, n0bits: int
+) -> None:
+    """Compose ``.offsets`` into ``out``: the node-0 entry (``n0bits`` bits
+    of ``entry0``), then the ordered ``(key, nbits)`` offsets chunks."""
+    _compose(
+        chain([(entry0, n0bits)], ((store.get(key), nbits) for key, nbits in chunks)),
+        out,
+    )
 
 
 def copy_bvgraph(
@@ -401,10 +335,3 @@ def copy_bvgraph(
         **props_kw,
     )
 
-
-def write_bvgraph_single(adjacency: list[list[int]], basename: str, **props_kw):
-    """Driver-local convenience: encode with full cross-boundary reference
-    selection (best compression, single-threaded)."""
-    g, o, p = encode_graph(adjacency, **props_kw)
-    BVGraphFiles(basename).write(g, o, p)
-    return p

@@ -1,46 +1,28 @@
 """Shared-storage seam for the distributed BVGraph sink.
 
-The sink's two jobs (encode, re-phase) and the driver's final compose all
-exchange intermediate segment artifacts. WHERE those artifacts live is a
-cluster-topology decision, so it is pluggable:
+The sink's encode tasks spill each segment's raw chunks here, and the
+composing driver reads them back in stream order. WHERE those chunks
+live is a cluster-topology decision, so it is pluggable:
 
 - ``LocalFSStore``: a directory on a filesystem every task and the driver
   can see — true on local[*] and on NFS / FUSE-mounted object storage.
   The default, and what the test suite exercises end-to-end.
-- ``MemoryStore``: an in-process dict. The single-process stand-in for an
-  object store in compose tests (a real deployment would implement
-  ``SegmentStore`` over S3/GCS: ``put`` = PUT object, ``open_read`` = GET).
-
-The final assembly likewise has two strategies behind one interface:
-
-- ``FileComposer``: streams boundary bytes and splices segment interiors
-  into one local file (``shutil.copyfileobj`` — no per-byte Python).
-- ``MultipartComposer``: the object-storage shape. Segment interiors are
-  byte-aligned by construction (the re-phase job exists exactly so this
-  is possible), so the final object is a server-side concatenation of
-  already-uploaded parts plus tiny literal runs for the boundary bytes —
-  S3 ``UploadPartCopy`` semantics. The driver moves O(n_segments) bytes,
-  never the graph. This class mocks the server side by recording the op
-  list and resolving it against the store; a real implementation would
-  issue the multipart calls instead.
-
-Both composers expose ``write`` (file-like, fed by the sink's compose
-with boundary bytes) for literal bytes and ``part(key)`` for a spilled
-interior; compose tests assert byte-identical output.
+- ``PyArrowFSStore``: objects under an ``s3://``/``gs://``/``hdfs://``
+  root via ``pyarrow.fs``, for clusters without a shared POSIX mount.
+- ``MemoryStore``: an in-process dict, for compose tests and writes that
+  encode and compose in one process.
 """
 
 from __future__ import annotations
 
-import io
 import os
 import shutil
 from abc import ABC, abstractmethod
-from typing import BinaryIO
 
 
 class SegmentStore(ABC):
-    """Keyed byte-blob storage shared by encode tasks, re-phase tasks and
-    the composing driver. Implementations must be picklable (they ship to
+    """Keyed byte-blob storage shared by the encode tasks and the
+    composing driver. Implementations must be picklable (they ship to
     executors) and safe for distinct-key concurrent writes."""
 
     @abstractmethod
@@ -50,14 +32,9 @@ class SegmentStore(ABC):
     def get(self, key: str) -> bytes: ...
 
     @abstractmethod
-    def open_read(self, key: str) -> BinaryIO: ...
-
-    @abstractmethod
-    def size(self, key: str) -> int: ...
-
-    @abstractmethod
     def cleanup(self) -> None:
-        """Remove every artifact (the sink's post-compose spill GC)."""
+        """Remove every artifact (the sink runs it after every write,
+        failed ones included)."""
 
 
 class LocalFSStore(SegmentStore):
@@ -82,12 +59,6 @@ class LocalFSStore(SegmentStore):
     def get(self, key: str) -> bytes:
         with open(self._path(key), "rb") as f:
             return f.read()
-
-    def open_read(self, key: str) -> BinaryIO:
-        return open(self._path(key), "rb")
-
-    def size(self, key: str) -> int:
-        return os.path.getsize(self._path(key))
 
     def cleanup(self) -> None:
         shutil.rmtree(self.root, ignore_errors=True)
@@ -135,14 +106,6 @@ class PyArrowFSStore(SegmentStore):
         fs, base = self._resolve()
         with fs.open_input_stream(f"{base}/{key}") as f:
             return f.read()
-
-    def open_read(self, key: str) -> BinaryIO:
-        fs, base = self._resolve()
-        return fs.open_input_stream(f"{base}/{key}")
-
-    def size(self, key: str) -> int:
-        fs, base = self._resolve()
-        return fs.get_file_info(f"{base}/{key}").size
 
     def cleanup(self) -> None:
         from pyarrow import fs as pafs
@@ -227,9 +190,9 @@ def store_for(basename: str) -> SegmentStore:
 
 
 class MemoryStore(SegmentStore):
-    """Dict-backed store: the single-process mock of an object store for
-    compose tests (and usable directly when encode/re-phase/compose all
-    run in one process)."""
+    """Dict-backed store: the single-process stand-in for an object store
+    in compose tests (and usable directly when encode and compose run in
+    one process)."""
 
     def __init__(self):
         self.blobs: dict[str, bytes] = {}
@@ -240,71 +203,6 @@ class MemoryStore(SegmentStore):
     def get(self, key: str) -> bytes:
         return self.blobs[key]
 
-    def open_read(self, key: str) -> BinaryIO:
-        return io.BytesIO(self.blobs[key])
-
-    def size(self, key: str) -> int:
-        return len(self.blobs[key])
-
     def cleanup(self) -> None:
         self.blobs.clear()
 
-
-class FileComposer:
-    """Compose the final stream into one local file: literal bytes are
-    written through (file-like ``write``), segment interiors are spliced
-    from the store with an OS-level copy."""
-
-    def __init__(self, path: str, store: SegmentStore):
-        from .io import open_output
-
-        self.fh = open_output(path)
-        self.store = store
-
-    def write(self, b: bytes) -> None:
-        self.fh.write(b)
-
-    def part(self, key: str) -> int:
-        """Splice a stored byte-aligned interior; returns its size."""
-        with self.store.open_read(key) as pf:
-            shutil.copyfileobj(pf, self.fh, 1 << 20)
-        return self.store.size(key)
-
-    def close(self) -> None:
-        self.fh.close()
-
-
-class MultipartComposer:
-    """Object-storage compose: record the op sequence (literal runs +
-    part references) a server-side multipart assembly would execute. The
-    driver ships only the literal boundary bytes — part bytes are
-    referenced by key and never stream through it.
-
-    ``result()`` resolves the ops against the store, standing in for the
-    storage service's concatenation; tests assert it is byte-identical to
-    ``FileComposer`` output."""
-
-    def __init__(self, store: SegmentStore):
-        self.store = store
-        self.ops: list[tuple[str, bytearray | str]] = []
-
-    def write(self, b: bytes) -> None:
-        if self.ops and self.ops[-1][0] == "lit":
-            self.ops[-1][1].extend(b)  # type: ignore[union-attr]
-        else:
-            self.ops.append(("lit", bytearray(b)))
-
-    def part(self, key: str) -> int:
-        self.ops.append(("part", key))
-        return self.store.size(key)
-
-    def result(self) -> bytes:
-        out = bytearray()
-        for kind, payload in self.ops:
-            out.extend(
-                payload if kind == "lit" else self.store.get(payload)  # type: ignore[arg-type]
-            )
-        return bytes(out)
-
-    def close(self) -> None:
-        pass

@@ -12,7 +12,7 @@ Spark job ending in the executor-parallel sink.
 
 Scale design: everything is edge-level DataFrame algebra — explode to
 arcs, map endpoints through broadcast-or-shuffled label joins, one
-groupBy rebuilds sorted dense adjacency, then the two-job sink writes.
+groupBy rebuilds sorted dense adjacency, then the sink writes.
 No driver-side per-node work; the permutation rides as a narrow
 (long, long) table.
 """

@@ -147,7 +147,7 @@ def materialize_bvgraph(
     adjacency the whole graph stack (source, algorithms, transforms)
     runs on. Node count = max endpoint + 1 (dense ids are the producer's
     contract, as with the sink generally). One groupBy rebuild + the
-    executor-parallel two-job sink; run under the maintenance-window
+    executor-parallel sink; run under the maintenance-window
     contract (stream stopped), like snapshot compaction.
 
     Note on degree-delta folding: deltas are SUMS, so the digest

@@ -166,29 +166,43 @@ def test_code_roundtrip_any_values(values):
         assert r.read_nibble() == v
 
 
+def _bits(raw: bytes, nbits: int) -> str:
+    return "".join(f"{b:08b}" for b in raw)[:nbits]
+
+
 @settings(max_examples=300, deadline=None)
 @given(
-    st.binary(min_size=1, max_size=64),
-    st.integers(min_value=0, max_value=7),
-    st.integers(min_value=0, max_value=7),
+    st.tuples(st.binary(min_size=1, max_size=2), st.integers(0, 7)),
+    st.lists(
+        st.tuples(st.binary(max_size=40), st.integers(0, 7)), max_size=8
+    ),
 )
-def test_rephase_interior_matches_bitstring(raw, k, drop):
-    """sink._rephase_interior (vectorized segment re-phasing) must agree
-    with a naive bit-string model: head ++ interior ++ tail, shifted to
-    phase k, reproduces the segment's bits exactly."""
-    from hadoopwebgraph_spark.bvgraph.sink import _rephase_interior
+def test_compose_offsets_matches_bitstring(entry, chunks):
+    """sink.compose_offsets (the driver's vectorized chunk re-phasing)
+    must agree with a naive bit-string model: the ``entry0`` bits, then
+    each chunk's first ``nbits`` bits, zero-padded to whole bytes. Chunks
+    run from 0 to 320 bits, so every phase, chunks under 16 bits and
+    garbage pad bits are covered."""
+    import io
 
-    nbits = 8 * len(raw) - drop
-    if nbits < 16:
-        return  # the writer routes micro-segments around _rephase_interior
-    bits = "".join(f"{b:08b}" for b in raw)[:nbits]
-    head, interior, tail, tail_fill = _rephase_interior(raw, nbits, k)
+    from hadoopwebgraph_spark.bvgraph.sink import compose_offsets
+    from hadoopwebgraph_spark.bvgraph.storage import MemoryStore
 
-    head_bits = f"{head:0{8 - k}b}" if k else ""
-    interior_bits = "".join(f"{b:08b}" for b in interior)
-    tail_bits = f"{tail:0{tail_fill}b}" if tail_fill else ""
-    assert head_bits + interior_bits + tail_bits == bits
-    assert (k + nbits) % 8 == tail_fill
+    entry0, n0bits = entry[0], 8 * len(entry[0]) - entry[1]
+    store, keyed = MemoryStore(), []
+    for i, (raw, drop) in enumerate(chunks):
+        store.put(f"c{i}", raw)
+        keyed.append((f"c{i}", max(0, 8 * len(raw) - drop)))
+    out = io.BytesIO()
+    compose_offsets(keyed, store, out, entry0, n0bits)
+
+    bits = _bits(entry0, n0bits) + "".join(
+        _bits(store.get(key), nbits) for key, nbits in keyed
+    )
+    bits += "0" * (-len(bits) % 8)
+    assert out.getvalue() == bytes(
+        int(bits[i : i + 8], 2) for i in range(0, len(bits), 8)
+    )
 
 
 # ---- round-5 media codec properties ----

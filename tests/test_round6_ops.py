@@ -329,16 +329,14 @@ def test_pyarrow_store_survives_pickle(tmp_path):
     st2 = pickle.loads(pickle.dumps(st))
     assert st2.get("k") == b"payload"
     st2.put("k2", b"\x00\xff" * 5)
-    assert st2.size("k2") == 10
-    with st2.open_read("k") as f:
-        assert f.read() == b"payload"
+    assert st2.get("k2") == b"\x00\xff" * 5
     st2.cleanup()
 
 
 def test_bvgraph_sink_roundtrip_through_pyarrow_store(spark, tmp_path):
     """Full distributed sink write with the NON-local (pyarrow.fs) store
-    implementation — encode tasks, re-phase tasks and the driver compose
-    all exchange artifacts through the blob-store interface; the output
+    implementation — the encode tasks spill and the driver compose reads
+    back every chunk through the blob-store interface; the output
     triple must decode identically to the source."""
     import pyarrow.parquet as pq
 
