@@ -128,11 +128,10 @@ def hyperanf_3hop(spark: SparkSession):
 def _graph_nodes_from_properties() -> int:
     """Node count of the active graph fixture from its .properties
     metadata (the catalog-stats analogue; no Spark job)."""
-    from .bvgraph.datasource import _plan_state
-    from .queries.graph import SMALL_BASENAME
+    from .bvgraph.datasource import graph_properties
+    from .queries.graph import graph_basename
 
-    basename = os.environ.get("SPARK_GRAFT_GRAPH_BASENAME", SMALL_BASENAME)
-    return _plan_state(basename)[1].nodes
+    return graph_properties(graph_basename()).nodes
 
 
 def check_nf(nf) -> None:

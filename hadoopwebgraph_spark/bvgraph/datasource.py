@@ -22,13 +22,17 @@ from them (columnar end-to-end; the reference is row-at-a-time). Total
 bytes moved per scan ≈ file size regardless of partition count — no read
 amplification.
 
-Options: ``basename`` (required), ``numSplits``, ``targetBytes``,
-``fromNode``, ``toNode``.
+Options: ``basename`` (required) and ``numSplits`` — the reference's
+``setBasename`` / ``setNumberOfSplits``.
 
-Filter pruning: ``src`` range predicates prune partitions at plan time.
+Filter pruning: ``src`` predicates (``=``, ``IN``, ``<``, ``<=``, ``>``,
+``>=``) arrive through ``pushFilters`` and prune partitions at plan time.
 We conservatively report every filter as unsupported so Spark re-applies
 them post-scan (exactly-once semantics preserved); pruning only drops
 partitions that provably contain no matching node.
+
+This module is the one reader of a graph's ``.properties``: other code
+asks ``graph_properties(basename)``, served from the plan cache.
 """
 
 from __future__ import annotations
@@ -65,7 +69,7 @@ _PLAN_CACHE: dict[tuple, tuple] = {}
 
 
 def _plan_state(basename: str):
-    """(props_text, props, offsets index) for a basename, cached on the
+    """(props, offsets index) for a basename, cached on the
     offsets file's (size, mtime) identity. The retained index is
     Elias-Fano-compressed (~10-12 bits/entry vs 64 for the int64 fold,
     mirroring the reference's EliasFanoMonotoneLongBigList,
@@ -77,15 +81,22 @@ def _plan_state(basename: str):
     if hit is None:
         from .ef import EliasFanoOffsets
 
-        props_text = read_text(basename + ".properties")
-        p = parse_properties(props_text)
+        p = parse_properties(read_text(basename + ".properties"))
         offsets = EliasFanoOffsets(
             load_offsets(read_bytes(basename + ".offsets"), p)
         )
         if len(_PLAN_CACHE) > 8:  # bound driver memory across basenames
             _PLAN_CACHE.clear()
-        hit = _PLAN_CACHE[key] = (props_text, p, offsets)
+        hit = _PLAN_CACHE[key] = (p, offsets)
     return hit
+
+
+def graph_properties(basename: str) -> BVGraphProperties:
+    """The graph's parsed ``.properties`` (node and arc counts, codes),
+    from the plan cache — the metadata lookup for code outside the
+    source, which never parses the file itself."""
+    return _plan_state(basename)[0]
+
 
 SCHEMA = StructType(
     [
@@ -98,7 +109,7 @@ SCHEMA = StructType(
 @dataclass
 class BVGraphPartition(InputPartition):
     graph_path: str
-    props_text: str
+    props: BVGraphProperties
     from_node: int
     up_to: int
     # offsets for nodes [seed_base, from_node] inclusive — covers window
@@ -120,69 +131,55 @@ class BVGraphReader(DataSourceReader):
         self.num_splits = int(options.get("numsplits", DEFAULT_SPLITS))
         if self.num_splits < 1:
             raise ValueError(f"numSplits must be >= 1, got {self.num_splits}")
-        # .option("targetBytes", 256 << 20): size partitions by compressed
-        # byte extent instead of a fixed split count — the maxPartitionBytes
-        # analog for this source; overrides numSplits when set
-        self.target_bytes: int | None = (
-            int(options["targetbytes"]) if "targetbytes" in options else None
-        )
-        if self.target_bytes is not None and self.target_bytes < 1:
-            raise ValueError(f"targetBytes must be >= 1, got {self.target_bytes}")
-        # manual pruning knobs (also driven by pushFilters)
-        self.from_node = int(options.get("fromnode", 0))
-        self.to_node_excl: int | None = (
-            int(options["tonode"]) if "tonode" in options else None
-        )
-        # exact src membership set from In/EqualTo pushdown (None = any)
+        # src pruning, narrowed only by pushFilters: the node range
+        # [from_node, to_node_excl) (None = all n nodes) and the exact
+        # membership set from IN / = (None = any)
+        self.from_node = 0
+        self.to_node_excl: int | None = None
         self.in_values: list[int] | None = None
 
     # -- filter pushdown (partition pruning only; Spark re-applies filters) --
     def pushFilters(self, filters):  # noqa: N802 (Spark API name)
         for f in filters:
-            lo, hi = _src_bounds(f)
+            lo, hi, members = _src_range(f)
             if lo is not None:
                 self.from_node = max(self.from_node, lo)
             if hi is not None:
                 self.to_node_excl = (
                     hi if self.to_node_excl is None else min(self.to_node_excl, hi)
                 )
-            # src IN (...) / src = k: keep the exact membership set too, so
-            # partitions BETWEEN sparse points are dropped, not just the
-            # ones outside [min, max]
-            vals = _src_members(f)
-            if vals is not None:
-                self.in_values = (
-                    sorted(vals)
-                    if self.in_values is None
-                    else sorted(set(self.in_values) & set(vals))
+            # keep the exact members too, so partitions BETWEEN sparse
+            # points are dropped, not just the ones outside [min, max]
+            if members is not None:
+                self.in_values = sorted(
+                    members if self.in_values is None else members & set(self.in_values)
                 )
         # report everything unsupported -> Spark evaluates filters post-scan
         return filters
 
     def partitions(self):
-        props_text, p, offsets = _plan_state(self.basename)
-
-        n = p.nodes
-        lo = max(0, self.from_node)
-        hi = n if self.to_node_excl is None else min(n, self.to_node_excl)
-        if n == 0 or lo >= hi:
-            # the API requires >=1 partition; emit one empty range
-            return [
-                BVGraphPartition(
-                    graph_path=self.basename + ".graph",
-                    props_text=props_text,
-                    from_node=0,
-                    up_to=0,
-                )
-            ]
-
+        p, offsets = _plan_state(self.basename)
         graph_path = self.basename + ".graph"
+        lo = max(0, self.from_node)
+        hi = p.nodes if self.to_node_excl is None else min(p.nodes, self.to_node_excl)
+        parts = self._split(graph_path, p, offsets, lo, hi) if lo < hi else []
+        if self.in_values is not None:
+            import bisect
+
+            vals = self.in_values
+
+            def covers(q: BVGraphPartition) -> bool:
+                i = bisect.bisect_left(vals, q.from_node)
+                return i < len(vals) and vals[i] < q.up_to
+
+            parts = [q for q in parts if covers(q)]
+        # the API requires >= 1 partition; an empty plan reads one empty range
+        return parts or [BVGraphPartition(graph_path, p, from_node=0, up_to=0)]
+
+    def _split(self, graph_path, p, offsets, lo, hi) -> list[BVGraphPartition]:
+        """Byte-balanced partitions covering nodes [lo, hi)."""
         total_bits = int(offsets[hi]) - int(offsets[lo])
-        if self.target_bytes is not None:
-            wanted = max(1, math.ceil((total_bits / 8) / self.target_bytes))
-        else:
-            wanted = self.num_splits
-        num_splits = min(wanted, hi - lo)
+        num_splits = min(self.num_splits, hi - lo)
         target = math.ceil(total_bits / num_splits) if total_bits else 1
 
         # backreach for window seeding: seeds need nodes down to
@@ -204,7 +201,7 @@ class BVGraphReader(DataSourceReader):
             parts.append(
                 BVGraphPartition(
                     graph_path=graph_path,
-                    props_text=props_text,
+                    props=p,
                     from_node=start,
                     up_to=end,
                     seed_base=seed_base,
@@ -214,25 +211,6 @@ class BVGraphReader(DataSourceReader):
                 )
             )
             start = end
-        if self.in_values is not None:
-            import bisect
-
-            vals = self.in_values
-
-            def covers(q: BVGraphPartition) -> bool:
-                i = bisect.bisect_left(vals, q.from_node)
-                return i < len(vals) and vals[i] < q.up_to
-
-            parts = [q for q in parts if covers(q)]
-            if not parts:  # API requires >= 1 partition
-                parts = [
-                    BVGraphPartition(
-                        graph_path=graph_path,
-                        props_text=props_text,
-                        from_node=0,
-                        up_to=0,
-                    )
-                ]
         return parts
 
     def read(self, partition: BVGraphPartition):
@@ -241,7 +219,6 @@ class BVGraphReader(DataSourceReader):
 
         if partition.up_to <= partition.from_node:
             return
-        p = parse_properties(partition.props_text)
         # ONE ranged request for exactly this task's byte extent — never the
         # whole file (≙ the reference's per-split seekable stream,
         # WebGraphInputFormat.java:108, HdfsRepositionableStream.java:17-29).
@@ -260,7 +237,7 @@ class BVGraphReader(DataSourceReader):
         )
         values, list_offsets, _ = decode_range(
             graph_bytes,
-            p,
+            partition.props,
             partition.from_node,
             partition.up_to,
             seed_offsets=seeds,
@@ -279,43 +256,26 @@ class BVGraphReader(DataSourceReader):
             )
 
 
-def _src_members(f: Filter) -> list[int] | None:
-    """Exact src membership a filter implies, or None (any value)."""
+def _src_range(f: Filter) -> tuple[int | None, int | None, set[int] | None]:
+    """(lo inclusive, hi exclusive, exact members) a filter implies on
+    src; None where it implies no bound or no membership set."""
     if getattr(f, "attribute", None) != ("src",):
-        return None
-    if isinstance(f, EqualTo) and isinstance(f.value, int):
-        return [f.value]
-    if isinstance(f, In):
-        vals = [v for v in f.value if isinstance(v, int)]
-        if vals and len(vals) == len(f.value):
-            return vals
-    return None
-
-
-def _src_bounds(f: Filter) -> tuple[int | None, int | None]:
-    """(lo_inclusive, hi_exclusive) bounds a filter implies on src."""
-    col = getattr(f, "attribute", None)
-    if col != ("src",):
-        return None, None
-    if isinstance(f, In):
-        vals = [v for v in f.value if isinstance(v, int)]
-        if vals and len(vals) == len(f.value):
-            return min(vals), max(vals) + 1
-        return None, None
-    v = getattr(f, "value", None)
-    if not isinstance(v, int):
-        return None, None
-    if isinstance(f, EqualTo):
-        return v, v + 1
+        return None, None, None
+    vals = f.value if isinstance(f, In) else (getattr(f, "value", None),)
+    if not vals or not all(isinstance(v, int) for v in vals):
+        return None, None, None
+    if isinstance(f, (In, EqualTo)):
+        return min(vals), max(vals) + 1, set(vals)
+    (v,) = vals
     if isinstance(f, GreaterThan):
-        return v + 1, None
+        return v + 1, None, None
     if isinstance(f, GreaterThanOrEqual):
-        return v, None
+        return v, None, None
     if isinstance(f, LessThan):
-        return None, v
+        return None, v, None
     if isinstance(f, LessThanOrEqual):
-        return None, v + 1
-    return None, None
+        return None, v + 1, None
+    return None, None, None
 
 
 class BVGraphDataSource(DataSource):

@@ -2,7 +2,7 @@
 ``codec``'s decode, segment-encode and offsets entry points. ``codec`` is
 the only caller; it runs its pure-Python spec when a function here
 returns ``None``, which happens only when the kernel is unavailable (no C
-compiler, load error, ``SPARK_GRAFT_NO_NATIVE=1``). Malformed input the
+compiler or a load error). Malformed input the
 kernel detects raises ``ValueError`` instead: re-running the Python spec
 on a buffer the kernel rejected would decode zero padding into garbage.
 Both implementations are pinned to identical outputs by the hypothesis
@@ -87,15 +87,14 @@ _TRIED = False
 
 
 def get_lib():
-    """The loaded kernel, or None (no compiler / load failure / opt-out)."""
+    """The loaded kernel, or None (no compiler / load failure)."""
     global _LIB, _TRIED
     if not _TRIED:
         _TRIED = True
-        if os.environ.get("SPARK_GRAFT_NO_NATIVE") != "1":
-            try:
-                _LIB = _compile_and_load()
-            except Exception:
-                _LIB = None
+        try:
+            _LIB = _compile_and_load()
+        except Exception:
+            _LIB = None
     return _LIB
 
 

@@ -317,20 +317,15 @@ def copy_bvgraph(
     recompress/re-window/relocate job). Node count comes from the source
     ``.properties`` (no sizing decode). ``props_kw`` (window_size,
     zeta_k, codes...) lets the copy change compression parameters."""
-    from .datasource import read_bvgraph
-    from .io import read_bytes
-    from .properties import parse_properties
+    from .datasource import graph_properties, read_bvgraph
 
-    src_props = parse_properties(
-        read_bytes(src_basename + ".properties").decode("utf-8")
-    )
     if num_splits is None:
         num_splits = spark.sparkContext.defaultParallelism
     df = read_bvgraph(spark, src_basename, num_splits=num_splits)
     return write_bvgraph(
         df,
         dst_basename,
-        n_nodes=src_props.nodes,
+        n_nodes=graph_properties(src_basename).nodes,
         aligned=True,
         **props_kw,
     )

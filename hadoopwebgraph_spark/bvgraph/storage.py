@@ -7,8 +7,9 @@ live is a cluster-topology decision, so it is pluggable:
 - ``LocalFSStore``: a directory on a filesystem every task and the driver
   can see — true on local[*] and on NFS / FUSE-mounted object storage.
   The default, and what the test suite exercises end-to-end.
-- ``PyArrowFSStore``: objects under an ``s3://``/``gs://``/``hdfs://``
-  root via ``pyarrow.fs``, for clusters without a shared POSIX mount.
+- ``PyArrowFSStore``: objects under an ``s3://``/``s3a://``/``gs://``/
+  ``hdfs://`` root via ``io.fs_for_path``, for clusters without a shared
+  POSIX mount.
 - ``MemoryStore``: an in-process dict, for compose tests and writes that
   encode and compose in one process.
 """
@@ -18,6 +19,8 @@ from __future__ import annotations
 import os
 import shutil
 from abc import ABC, abstractmethod
+
+from .io import fs_for_path
 
 
 class SegmentStore(ABC):
@@ -80,9 +83,7 @@ class PyArrowFSStore(SegmentStore):
 
     def _resolve(self):
         if self._fs is None:
-            from pyarrow import fs as pafs
-
-            self._fs, self._base = pafs.FileSystem.from_uri(self.root)
+            self._fs, self._base = fs_for_path(self.root)
         return self._fs, self._base
 
     def __getstate__(self):
@@ -128,23 +129,6 @@ class PyArrowFSStore(SegmentStore):
                 f"spill cleanup failed — data leaked at {base}: {exc}",
                 stacklevel=2,
             )
-
-
-def fs_for_path(path: str):
-    """Resolve ``(pyarrow FileSystem, fs-local base path)`` for a plain
-    path or a URI — the scheme-routing seam the maintenance jobs share
-    with the sink. ``s3a://``/``s3n://`` (the Hadoop connector schemes
-    Spark uses) are normalized to pyarrow's ``s3://`` so one URI string
-    can drive both the Spark read/write AND the pyarrow listing/swap."""
-    from pyarrow import fs as pafs
-
-    if "://" in path:
-        for hadoop_scheme in ("s3a://", "s3n://"):
-            if path.startswith(hadoop_scheme):
-                path = "s3://" + path[len(hadoop_scheme) :]
-                break
-        return pafs.FileSystem.from_uri(path)
-    return pafs.LocalFileSystem(), path
 
 
 def move_dir(fs, src: str, dst: str) -> None:

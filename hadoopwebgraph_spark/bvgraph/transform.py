@@ -26,15 +26,12 @@ from .properties import BVGraphProperties
 
 
 def _read_edges_and_n(spark: SparkSession, basename: str, num_splits=None):
-    from .datasource import read_bvgraph
-    from .io import read_bytes
-    from .properties import parse_properties
+    from .datasource import graph_properties, read_bvgraph
 
-    props = parse_properties(read_bytes(basename + ".properties").decode("utf-8"))
     if num_splits is None:
         num_splits = spark.sparkContext.defaultParallelism
     g = read_bvgraph(spark, basename, num_splits=num_splits)
-    return g, props.nodes
+    return g, graph_properties(basename).nodes
 
 
 def _write_dense(edges: DataFrame, n: int, dst_basename: str, **props_kw):

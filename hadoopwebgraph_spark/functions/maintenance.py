@@ -16,7 +16,7 @@ original atomically (rename), so concurrent readers see either the old
 or the new layout, never a half-written mix.
 
 Storage routing: every listing / rename / delete goes through
-``bvgraph.storage.fs_for_path`` (pyarrow.fs), so the SAME path string
+``bvgraph.io.fs_for_path`` (pyarrow.fs), so the SAME path string
 drives Spark's read/write and the metadata ops — plain paths and
 ``file://`` use the local filesystem, ``hdfs://``/``s3a://``/``gs://``
 route to the matching pyarrow filesystem with no shared-POSIX-mount
@@ -35,7 +35,8 @@ import uuid
 
 from pyspark.sql import SparkSession
 
-from ..bvgraph.storage import fs_for_path, move_dir
+from ..bvgraph.io import fs_for_path
+from ..bvgraph.storage import move_dir
 
 # The third maintenance job (r13) lives with the snapshot layout it
 # compacts but belongs to this surface: fold a batch-partition snapshot

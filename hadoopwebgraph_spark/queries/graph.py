@@ -21,7 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..bvgraph.datasource import read_bvgraph
+from ..bvgraph.datasource import graph_properties, read_bvgraph
 from ..cache import register_release_hook, release_all, track
 from ..registry import register
 
@@ -35,6 +35,12 @@ _T = f"read_parquet('{SMALL_PARQUET}')"
 
 
 
+def graph_basename() -> str:
+    """The active graph: $SPARK_GRAFT_GRAPH_BASENAME (benchmarking
+    against a larger graph), else the committed 2k-node fixture."""
+    return os.environ.get("SPARK_GRAFT_GRAPH_BASENAME", SMALL_BASENAME)
+
+
 _MEMO: dict[tuple, DataFrame] = {}
 register_release_hook(_MEMO.clear)
 
@@ -45,7 +51,7 @@ def _memo_key(spark: SparkSession, tag: str) -> tuple:
     within a session, so content never enters the key)."""
     return (
         id(spark),
-        os.environ.get("SPARK_GRAFT_GRAPH_BASENAME", SMALL_BASENAME),
+        graph_basename(),
         os.environ.get("SPARK_GRAFT_GRAPH_SPLITS", ""),
         tag,
     )
@@ -98,7 +104,7 @@ def graph_df(spark: SparkSession, basename: str | None = None) -> DataFrame:
     numSplits defaults to the cluster's core count rather than the
     reference's fixed 100 (WebGraphInputFormat.java:19): per-task Python
     worker round-trips dominate when tasks decode only a few KB."""
-    basename = basename or os.environ.get("SPARK_GRAFT_GRAPH_BASENAME", SMALL_BASENAME)
+    basename = basename or graph_basename()
     num_splits = int(
         os.environ.get(
             "SPARK_GRAFT_GRAPH_SPLITS", spark.sparkContext.defaultParallelism
@@ -317,10 +323,7 @@ def g13_reachability_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFram
     # 1.58 s base at <=1% steal; broadcast-hint variants matched this
     # but gamble on frontier size at 100 TB, the edges-broadcast
     # variant regressed (2.3 s — per-iteration broadcast rebuild).
-    from ..bvgraph.datasource import _plan_state
-
-    basename = os.environ.get("SPARK_GRAFT_GRAPH_BASENAME", SMALL_BASENAME)
-    arcs = _plan_state(basename)[1].arcs
+    arcs = graph_properties(graph_basename()).arcs
     n = max(1, min(ck.rdd.getNumPartitions(), (arcs + 99_999) // 100_000))
     ck.coalesce(n).createOrReplaceTempView("g13_edges")
     return spark.sql(
@@ -678,14 +681,12 @@ def g31_permute_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..bvgraph.io import read_bytes
-    from ..bvgraph.properties import parse_properties
     from ..bvgraph.transform import permute_bvgraph, reverse_permutation
 
     # always the 2k fixture (NOT the bench basename override): the
     # oracle reads this fixture's parquet twin
     src = SMALL_BASENAME
-    n = parse_properties(read_bytes(src + ".properties").decode("utf-8")).nodes
+    n = graph_properties(src).nodes
     out_dir = os.path.join(
         tempfile.gettempdir(), f"hwg_g31_permute.{os.getpid()}"
     )
@@ -736,8 +737,6 @@ def g34_union_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..bvgraph.io import read_bytes
-    from ..bvgraph.properties import parse_properties
     from ..bvgraph.transform import (
         permute_bvgraph,
         reverse_permutation,
@@ -747,7 +746,7 @@ def g34_union_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # always the 2k fixture (NOT the bench basename override): the
     # oracle reads this fixture's parquet twin
     src = SMALL_BASENAME
-    n = parse_properties(read_bytes(src + ".properties").decode("utf-8")).nodes
+    n = graph_properties(src).nodes
     out_dir = os.path.join(
         tempfile.gettempdir(), f"hwg_g34_union.{os.getpid()}"
     )

@@ -10,9 +10,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half the host's physical memory, capped at 24g: a local-mode
+    driver heap must leave room for the Python workers and the OS."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(half_mb, 24 << 10)}m"
+
+
 def get_spark(app_name: str = "hadoopwebgraph_spark") -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    driver_mem = os.environ.get("SPARK_DRIVER_MEM", "24g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -38,8 +45,6 @@ def get_spark(app_name: str = "hadoopwebgraph_spark") -> SparkSession:
         # rejects; read it as raw nanos (long) and let catalog.load_events
         # convert to a microsecond timestamp.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # enable src-range partition pruning in the bvgraph Python DataSource
-        .config("spark.sql.python.filterPushdown.enabled", "true")
     )
     # Measurement-session heap hygiene (r18, guide §5): commit + touch
     # the whole driver heap ONCE at startup instead of expanding it
@@ -61,12 +66,9 @@ def get_spark(app_name: str = "hadoopwebgraph_spark") -> SparkSession:
         )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # Register the custom BVGraph source on every session so
-    # spark.read.format("bvgraph") works out of the box.
-    try:
-        from .bvgraph.datasource import register as _register_bvgraph
+    # Register the custom BVGraph source (and its filter pushdown) on
+    # every session so spark.read.format("bvgraph") works out of the box.
+    from .bvgraph.datasource import register as _register_bvgraph
 
-        _register_bvgraph(spark)
-    except Exception:
-        pass  # source not available yet during early bootstrap
+    _register_bvgraph(spark)
     return spark

@@ -6,6 +6,14 @@ from __future__ import annotations
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql.datasource import (
+    EqualTo,
+    GreaterThan,
+    GreaterThanOrEqual,
+    In,
+    LessThan,
+    LessThanOrEqual,
+)
 
 from hadoopwebgraph_spark.bvgraph.datasource import (
     BVGraphReader,
@@ -33,8 +41,7 @@ def test_in_filter_prunes_between_points(spark, twin):
     reader = BVGraphReader({"basename": SMALL_BASENAME, "numsplits": "50"})
     full = len(reader.partitions())
     reader2 = BVGraphReader({"basename": SMALL_BASENAME, "numsplits": "50"})
-    reader2.in_values = [5, 1900]
-    reader2.from_node, reader2.to_node_excl = 5, 1901
+    reader2.pushFilters([In(("src",), (5, 1900))])
     pruned = reader2.partitions()
     assert len(pruned) <= 3 < full
     for q in pruned:
@@ -130,30 +137,6 @@ def test_truncated_unary_field_fails_fast():
         native.decode_range(b"\x00" * 4 + b"\x00" * 16, p, 0, 1)
 
 
-def test_target_bytes_partition_sizing(spark, twin):
-    """.option('targetBytes', n) sizes partitions by compressed byte
-    extent (the maxPartitionBytes analog), overriding numSplits."""
-    from hadoopwebgraph_spark.bvgraph.datasource import _plan_state
-
-    _, _, offsets = _plan_state(SMALL_BASENAME)
-    total_bytes = int(offsets[2000]) / 8
-    target = int(total_bytes // 5)
-    reader = BVGraphReader(
-        {"basename": SMALL_BASENAME, "targetbytes": str(target)}
-    )
-    parts = reader.partitions()
-    assert 5 <= len(parts) <= 7  # ~total/target splits, byte-balanced
-    for part in parts:
-        assert part.end_byte - part.start_byte <= 2 * target + 64
-    df = (
-        spark.read.format("bvgraph")
-        .option("basename", SMALL_BASENAME)
-        .option("targetBytes", target)
-        .load()
-    )
-    assert {r.src: list(r.adj) for r in df.collect()} == twin
-
-
 def test_python_fallback_path_matches_native(monkeypatch, twin):
     """With the C kernel unavailable, the source's read decodes with the
     Python spec; every partition, mid-graph seeded starts included, must
@@ -186,22 +169,102 @@ def test_filter_pruning_plan_and_result(spark, twin):
     reader = BVGraphReader({"basename": SMALL_BASENAME, "numsplits": "50"})
     full = len(reader.partitions())
     reader2 = BVGraphReader({"basename": SMALL_BASENAME, "numsplits": "50"})
-    reader2.from_node, reader2.to_node_excl = 100, 121
-    pruned = len(reader2.partitions())
-    assert pruned < full
-
-
-def test_manual_range_options(spark, twin):
-    df = (
-        spark.read.format("bvgraph")
-        .option("basename", SMALL_BASENAME)
-        .option("numSplits", 10)
-        .option("fromNode", 500)
-        .option("toNode", 600)
-        .load()
+    reader2.pushFilters(
+        [GreaterThanOrEqual(("src",), 100), LessThanOrEqual(("src",), 120)]
     )
-    rows = {r.src: list(r.adj) for r in df.collect()}
+    pruned = reader2.partitions()
+    assert len(pruned) < full
+    assert pruned[0].from_node == 100 and pruned[-1].up_to == 121
+
+
+def test_src_range_where_scan(spark, twin):
+    df = read_bvgraph(spark, SMALL_BASENAME, num_splits=10)
+    rows = {r.src: list(r.adj) for r in df.where("src >= 500 AND src < 600").collect()}
     assert rows == {k: v for k, v in twin.items() if 500 <= k < 600}
+
+
+_SRC = ("src",)
+_FULL_8 = [
+    (0, 248), (248, 491), (491, 710), (710, 952),
+    (952, 1231), (1231, 1472), (1472, 1704), (1704, 2000),
+]
+
+
+# (where clause, the filters Spark pushes for it, the (from_node, up_to)
+# plan at numSplits=8): range filters re-plan 8 byte-balanced splits
+# inside their range; IN / = keep only the splits holding a member
+@pytest.mark.parametrize(
+    "cond, filters, planned",
+    [
+        ("src = 700", [EqualTo(_SRC, 700)], [(700, 701)]),
+        (
+            "src IN (5, 42, 1900)",
+            [In(_SRC, (5, 42, 1900))],
+            [(5, 245), (1647, 1901)],
+        ),
+        (
+            "src > 1500",
+            [GreaterThan(_SRC, 1500)],
+            [
+                (1501, 1559), (1559, 1617), (1617, 1676), (1676, 1729),
+                (1729, 1799), (1799, 1870), (1870, 1937), (1937, 2000),
+            ],
+        ),
+        (
+            "src >= 500",
+            [GreaterThanOrEqual(_SRC, 500)],
+            [
+                (500, 662), (662, 836), (836, 1044), (1044, 1250),
+                (1250, 1426), (1426, 1599), (1599, 1797), (1797, 2000),
+            ],
+        ),
+        (
+            "src < 600",
+            [LessThan(_SRC, 600)],
+            [
+                (0, 72), (72, 164), (164, 235), (235, 310),
+                (310, 381), (381, 450), (450, 532), (532, 600),
+            ],
+        ),
+        (
+            "src <= 120",
+            [LessThanOrEqual(_SRC, 120)],
+            [
+                (0, 20), (20, 35), (35, 51), (51, 65),
+                (65, 78), (78, 98), (98, 114), (114, 121),
+            ],
+        ),
+        (
+            "src >= 100 AND src < 1500 AND src IN (50, 120, 1300, 1800)",
+            [
+                GreaterThanOrEqual(_SRC, 100),
+                LessThan(_SRC, 1500),
+                In(_SRC, (50, 120, 1300, 1800)),
+            ],
+            [(100, 280), (1169, 1346)],
+        ),
+        # a non-int literal prunes nothing (Spark itself folds this
+        # predicate on an INT column to false and scans no partition)
+        ("src = 5.5", [EqualTo(_SRC, 5.5)], _FULL_8),
+    ],
+    ids=["eq", "in", "gt", "ge", "lt", "le", "range_and_in", "non_int"],
+)
+def test_src_pushdown(spark, twin, cond, filters, planned):
+    """Each src predicate kind returns exactly the twin's rows through
+    Spark, and pushFilters plans exactly the pruned partition set."""
+    import duckdb
+
+    df = read_bvgraph(spark, SMALL_BASENAME, num_splits=8).where(cond)
+    keep = duckdb.sql(
+        f"SELECT src FROM read_parquet('{SMALL_PARQUET}') WHERE {cond}"
+    ).fetchall()
+    rows = {r.src: list(r.adj) for r in df.collect()}
+    assert rows == {k: twin[k] for (k,) in keep}
+    reader = BVGraphReader({"basename": SMALL_BASENAME, "numsplits": "8"})
+    reader.pushFilters(filters)
+    assert [(q.from_node, q.up_to) for q in reader.partitions()] == planned
+    scanned = df.rdd.getNumPartitions()
+    assert scanned == (0 if cond == "src = 5.5" else len(planned))
 
 
 def test_byte_balanced_partitions():

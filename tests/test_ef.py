@@ -56,7 +56,7 @@ def test_planner_uses_ef(spark):
     )
     from hadoopwebgraph_spark.queries.graph import SMALL_BASENAME
 
-    _, _, offsets = _plan_state(SMALL_BASENAME)
+    _, offsets = _plan_state(SMALL_BASENAME)
     assert isinstance(offsets, EliasFanoOffsets)
     reader = BVGraphReader({"basename": SMALL_BASENAME, "numsplits": "13"})
     parts = reader.partitions()

@@ -331,7 +331,7 @@ def test_compact_files_crash_sweep_every_mutation(spark, tmp_path, monkeypatch):
 
     # pyarrow filesystem objects are C extensions (attrs read-only), so
     # inject the counter through a proxy returned by fs_for_path instead
-    from hadoopwebgraph_spark.bvgraph.storage import fs_for_path as real_ffp
+    from hadoopwebgraph_spark.bvgraph.io import fs_for_path as real_ffp
 
     class _CountingFS:
         def __init__(self, fs):
@@ -388,10 +388,8 @@ def test_digest_snapshot_crash_sweep_every_mutation(spark, tmp_path, monkeypatch
     identically (digest set is a superset that contains every original
     digest) — and that re-running the compaction converges to a single
     partition with the exact original digest set."""
-    from hadoopwebgraph_spark.bvgraph.storage import (
-        fs_for_path as real_ffp,
-        move_dir as real_move,
-    )
+    from hadoopwebgraph_spark.bvgraph.io import fs_for_path as real_ffp
+    from hadoopwebgraph_spark.bvgraph.storage import move_dir as real_move
     from hadoopwebgraph_spark.functions import maintenance
     from hadoopwebgraph_spark.functions.dedup import _dedup_one_batch
 

@@ -75,6 +75,24 @@ def _compose_streams(store, graph_chunks, offsets_chunks, entry0, n0bits):
     return g.getvalue(), o.getvalue()
 
 
+
+def test_fs_for_path_routes_schemes(monkeypatch):
+    """One resolver for every path: plain paths stay local, and Spark's
+    ``s3a://`` scheme reaches pyarrow's S3 filesystem. The explicit
+    region (and the disabled instance-metadata lookup) keep the
+    resolution offline."""
+    from pyarrow import fs as pafs
+
+    from hadoopwebgraph_spark.bvgraph.io import fs_for_path
+
+    fs, path = fs_for_path("/data/g")
+    assert isinstance(fs, pafs.LocalFileSystem) and path == "/data/g"
+    monkeypatch.setenv("AWS_EC2_METADATA_DISABLED", "true")
+    fs, path = fs_for_path("s3a://bucket/g?region=us-east-1")
+    assert isinstance(fs, pafs.S3FileSystem) and path == "bucket/g"
+    assert fs.region == "us-east-1"
+
+
 def test_compose_multipart_matches_file(tmp_path):
     """Three segments composed from a local-FS store and from a blob
     store give the same bytes, and those bytes are a correct BVGraph."""
