@@ -10,6 +10,10 @@ is an independent implementation: pure Python over bytes/bytearray, MSB
 first within each byte, matching the dsiutils InputBitStream bit order the
 reference relies on.
 
+The readers are the plain executable spec of each code, not a fast path:
+the C kernel (``native``) does the decoding every workload runs, and the
+hypothesis suite pins it to these definitions.
+
 Code ids match the BVGraph compressionflags nibble values
 (HdfsBVGraph.java:307-315 unpacks one 4-bit code id per field):
 DELTA=1 GAMMA=2 UNARY=7 ZETA=8 NIBBLE=9 (GOLOMB/ARITH/INTERP unsupported,
@@ -43,29 +47,26 @@ def nat2int(x: int) -> int:
     return x >> 1 if (x & 1) == 0 else -((x >> 1) + 1)
 
 
-_PAD = b"\x00" * 16  # window guard: codes may peek up to 96 bits ahead
+_PAD = b"\x00" * 16  # native subtracts this length back off
 
 
 def pad(data: bytes) -> bytes:
-    """Pre-pad a buffer once for use with ``BitReader(..., prepadded=True)``."""
+    """Zero-pad a buffer for the C kernel (``native``), whose word-wide
+    reads may touch up to 16 bytes past the last code."""
     return data + _PAD
 
 
 class BitReader:
-    """MSB-first bit reader over a bytes-like buffer.
+    """MSB-first bit reader over a bytes-like buffer. Each code is read
+    by its textbook definition from ``read_unary``, ``read_int`` and
+    ``read_bit``; a read past the end of the buffer raises
+    ``IndexError``."""
 
-    The gamma/delta/zeta hot paths decode from a single 64-bit window
-    fetched with one ``int.from_bytes`` (the buffer is zero-padded at
-    construction so the peek never over-runs)."""
+    __slots__ = ("data", "pos")
 
-    __slots__ = ("data", "pos", "readers_cache")
-
-    def __init__(self, data: bytes, pos_bits: int = 0, prepadded: bool = False):
-        # pass prepadded=True (with data ending in bitio.pad()) to share one
-        # padded buffer across many readers instead of copying per reader
-        self.data = data if prepadded else data + _PAD
+    def __init__(self, data: bytes, pos_bits: int = 0):
+        self.data = data
         self.pos = pos_bits
-        self.readers_cache = None  # decode-kernel per-reader dispatch cache
 
     def position(self, pos_bits: int) -> None:
         self.pos = pos_bits
@@ -77,28 +78,28 @@ class BitReader:
 
     def read_int(self, k: int) -> int:
         """Read k bits as an unsigned big-endian integer."""
-        if k == 0:
-            return 0
         p = self.pos
         end = p + k
+        if end > len(self.data) << 3:
+            raise IndexError(
+                f"{k}-bit read at bit {p} runs past the {len(self.data)}-byte buffer"
+            )
         self.pos = end
+        if k == 0:
+            return 0
         first = p >> 3
         last = (end - 1) >> 3
         chunk = int.from_bytes(self.data[first : last + 1], "big")
         return (chunk >> (((last + 1) << 3) - end)) & ((1 << k) - 1)
 
     def read_unary(self) -> int:
-        """Count 0-bits until the terminating 1-bit (byte loop beats the
-        64-bit window fetch here: typical unary values are 0-2 bits)."""
+        """Count 0-bits until the terminating 1-bit, a byte at a time."""
         data = self.data
         p = self.pos
         n = 0
-        # finish the current byte, then whole bytes, bit-by-bit is fine for
-        # the short runs unary produces in practice
         while True:
-            byte = data[p >> 3]
             rem = 8 - (p & 7)
-            window = byte & ((1 << rem) - 1)
+            window = data[p >> 3] & ((1 << rem) - 1)
             if window == 0:
                 n += rem
                 p += rem
@@ -109,112 +110,26 @@ class BitReader:
             self.pos = p
             return n
 
-    def _window64(self) -> int:
-        """64 bits starting at the cursor (zero-padded past the end)."""
-        p = self.pos
-        i = p >> 3
-        chunk = int.from_bytes(self.data[i : i + 9], "big")  # 72 bits
-        return (chunk >> (8 - (p & 7))) & 0xFFFFFFFFFFFFFFFF
-
     def read_gamma(self) -> int:
-        # gamma(x) = msb zeros, 1, then the msb low bits of x+1: the top
-        # 2*msb+1 bits of the window ARE x+1
-        w = self._window64()
-        if w == 0:  # long unary run (> 32 zeros); fall back
-            msb = self.read_unary()
-            return ((1 << msb) | self.read_int(msb)) - 1
-        lz = 64 - w.bit_length()
-        self.pos += 2 * lz + 1
-        return (w >> (63 - 2 * lz)) - 1
+        """gamma(x): msb(x+1) in unary, then the msb low bits of x+1."""
+        msb = self.read_unary()
+        return ((1 << msb) | self.read_int(msb)) - 1
 
     def read_delta(self) -> int:
+        """delta(x): msb(x+1) in gamma, then the msb low bits of x+1."""
         msb = self.read_gamma()
-        if msb == 0:
-            return 0
         return ((1 << msb) | self.read_int(msb)) - 1
 
     def read_zeta(self, k: int) -> int:
-        w = self._window64()
-        if w == 0:
-            h = self.read_unary()
-            left = 1 << (h * k)
-            m = self.read_int(h * k + k - 1)
-            if m < left:
-                return m + left - 1
-            return (m << 1) + self.read_bit() - 1
-        h = 64 - w.bit_length()
-        hk = h * k
-        need = h + 1 + hk + k - 1
-        if need <= 64:
-            left = 1 << hk
-            m = (w >> (64 - need)) & ((1 << (hk + k - 1)) - 1)
-            if m < left:
-                self.pos += need
-                return m + left - 1
-            extra = (w >> (63 - need)) & 1
-            self.pos += need + 1
-            return (m << 1) + extra - 1
-        # rare huge value: slow path
-        self.pos += h + 1
-        left = 1 << hk
-        m = self.read_int(hk + k - 1)
+        """zeta_k(x): h = msb(x+1) // k in unary, then x+1 in a minimal
+        binary code over [2^(hk), 2^((h+1)k)): hk+k-1 bits, plus one more
+        bit for the upper part of the interval."""
+        h = self.read_unary()
+        left = 1 << (h * k)
+        m = self.read_int(h * k + k - 1)
         if m < left:
             return m + left - 1
         return (m << 1) + self.read_bit() - 1
-
-    def read_zeta_run(self, n: int, k: int) -> list[int]:
-        """Decode n consecutive zeta-k codes with all state in locals —
-        the residual-stream hot loop (values < 2^32 always fit one
-        64-bit window: h <= 31/k, so h+1 + h*k+k <= 64)."""
-        data = self.data
-        p = self.pos
-        out = []
-        append = out.append
-        for _ in range(n):
-            i = p >> 3
-            w = (
-                int.from_bytes(data[i : i + 9], "big") >> (8 - (p & 7))
-            ) & 0xFFFFFFFFFFFFFFFF
-            if w == 0:  # degenerate long-zero run; defer to slow path
-                self.pos = p
-                append(self.read_zeta(k))
-                p = self.pos
-                continue
-            h = 64 - w.bit_length()
-            hk = h * k
-            need = h + hk + k  # h+1 + hk+k-1
-            left = 1 << hk
-            m = (w >> (64 - need)) & ((1 << (hk + k - 1)) - 1)
-            if m < left:
-                p += need
-                append(m + left - 1)
-            else:
-                append((m << 1) + ((w >> (63 - need)) & 1) - 1)
-                p += need + 1
-        self.pos = p
-        return out
-
-    def read_gamma_run(self, n: int) -> list[int]:
-        """Decode n consecutive gamma codes with state in locals."""
-        data = self.data
-        p = self.pos
-        out = []
-        append = out.append
-        for _ in range(n):
-            i = p >> 3
-            w = (
-                int.from_bytes(data[i : i + 9], "big") >> (8 - (p & 7))
-            ) & 0xFFFFFFFFFFFFFFFF
-            if w == 0:
-                self.pos = p
-                append(self.read_gamma())
-                p = self.pos
-                continue
-            lz = 64 - w.bit_length()
-            p += 2 * lz + 1
-            append((w >> (63 - 2 * lz)) - 1)
-        self.pos = p
-        return out
 
     def read_nibble(self) -> int:
         x = 0

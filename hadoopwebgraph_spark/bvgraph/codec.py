@@ -20,7 +20,10 @@ This module is the only caller of the C kernel (``native``). Its four
 kernel entry points — ``decode_range``, ``encode_segment_csr``,
 ``encode_offsets`` and ``load_offsets`` — call the kernel once and run
 the Python spec below only when the kernel is unavailable; output is
-identical either way.
+identical either way. The spec keeps no fast path of its own: it reads
+every field with the plain ``bitio`` code readers from an unpadded
+buffer, so it stays the simplest statement of the format that the
+hypothesis suite pins the kernel to.
 """
 
 from __future__ import annotations
@@ -31,7 +34,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from . import native
-from .bitio import GAMMA, ZETA, BitReader, BitWriter, int2nat, nat2int, pad
+from .bitio import BitReader, BitWriter, int2nat, nat2int, pad
 from .properties import BVGraphProperties
 
 
@@ -74,19 +77,6 @@ def _extract_intervals(extras: list[int], min_len: int) -> tuple[list[tuple[int,
             residuals.extend(extras[i : j + 1])
         i = j + 1
     return intervals, residuals
-
-
-def _check_ascending(succ, x) -> None:
-    """BVGraph adjacency lists are strictly ascending successor SETS —
-    both encoders (Python spec and C kernel) assume it and silently
-    emit undecodable bits otherwise (gap coding goes negative). Fail
-    loudly with the offending node instead."""
-    if any(b <= a for a, b in zip(succ, succ[1:])):
-        raise ValueError(
-            f"node {x}: successor list must be strictly ascending "
-            f"(sorted, duplicate-free); got {list(succ)[:20]}... "
-            "— sort_array() the adj column (and dedup) before encoding"
-        )
 
 
 def _encode_node(
@@ -181,6 +171,7 @@ def encode_segment_py(
     tries ref=0 plus every window candidate whose chain depth stays within
     max_ref_count and keeps the encoding with the fewest bits (measured
     exactly on a scratch writer) — the executable spec for the C encoder.
+    Lists must be strictly ascending; ``encode_segment_csr`` checks that.
 
     Returns (nbits, buffer of ceil(nbits/8) bytes, n+1 bit offsets).
     """
@@ -189,7 +180,6 @@ def encode_segment_py(
     ref_counts = [0] * max(p.window_size + 1, 1)
     for local_x, succ in enumerate(adj):
         x = first_src + local_x
-        _check_ascending(succ, x)
         best: tuple[int, int] | None = None
         candidates = [0]
         if p.window_size > 0:
@@ -222,8 +212,9 @@ def encode_segment_csr(
 
     Returns (nbits, buffer of ceil(nbits/8) bytes, n+1 int64 bit offsets).
     """
-    # strict-ascending guard, vectorized: a non-positive gap is legal
-    # only at a list boundary (see _check_ascending)
+    # BVGraph lists are strictly ascending successor sets; both encoders
+    # assume it and would emit undecodable bits otherwise (gap coding
+    # goes negative). A non-positive gap is legal only at a list boundary.
     if len(values) > 1:
         bad = np.flatnonzero(np.diff(values) <= 0) + 1
         if len(bad):
@@ -275,7 +266,7 @@ def load_offsets(offsets_bytes: bytes, p: BVGraphProperties) -> np.ndarray:
     (n+1 entries) — the NumPy equivalent of the reference's Elias-Fano
     list (HdfsBVGraph.java:371-387,410-436). 8 bytes/node keeps 134M nodes
     in ~1 GB driver memory; EliasFanoOffsets (below the planner) compacts
-    the retained copy. Kernel-detected corruption raises ``ValueError``."""
+    the retained copy. A truncated stream raises ``ValueError``."""
     fast = native.decode_offsets(pad(offsets_bytes), p.nodes + 1, p.offset_code, p.zeta_k)
     if fast is not None:
         return fast
@@ -283,9 +274,12 @@ def load_offsets(offsets_bytes: bytes, p: BVGraphProperties) -> np.ndarray:
     rd = r.make_reader(p.offset_code, p.zeta_k)
     out = np.empty(p.nodes + 1, dtype=np.int64)
     acc = 0
-    for i in range(p.nodes + 1):
-        acc += rd()
-        out[i] = acc
+    try:
+        for i in range(p.nodes + 1):
+            acc += rd()
+            out[i] = acc
+    except IndexError as e:
+        raise ValueError(f"corrupt or truncated .offsets stream ({e})") from e
     return out
 
 
@@ -363,29 +357,16 @@ class _Decoder:
     """Shared decode state over one .graph buffer."""
 
     def __init__(self, graph_bytes: bytes, p: BVGraphProperties, offsets: np.ndarray | None = None):
-        self.data = pad(graph_bytes)  # padded ONCE; readers share it
+        self.data = graph_bytes
         self.p = p
         self.offsets = offsets
-
-    def _readers(self, r: BitReader):
-        cached = r.readers_cache
-        if cached is None:
-            p = self.p
-            cached = r.readers_cache = (
-                r.make_reader(p.outdegree_code, p.zeta_k),
-                r.make_reader(p.reference_code, p.zeta_k),
-                r.make_reader(p.block_count_code, p.zeta_k),
-                r.make_reader(p.block_code, p.zeta_k),
-                r.make_reader(p.residual_code, p.zeta_k),
-            )
-        return cached
 
     def decode_node_random(self, x: int) -> list[int]:
         """Random-access decode of node x (offsets required); recurses into
         the reference chain like HdfsBVGraph.successors with window=None
         (HdfsBVGraph.java:189)."""
         assert self.offsets is not None, "random access requires offsets"
-        r = BitReader(self.data, int(self.offsets[x]), prepadded=True)
+        r = BitReader(self.data, int(self.offsets[x]))
         return self._decode_at(r, x, window=None, outd=None)
 
     def _decode_at(
@@ -396,7 +377,16 @@ class _Decoder:
         outd: list[int] | None,
     ) -> list[int]:
         p = self.p
-        rd_out, rd_ref, rd_bcnt, rd_blk, rd_res = self._readers(r)
+        rd_out, rd_ref, rd_bcnt, rd_blk, rd_res = (
+            r.make_reader(code, p.zeta_k)
+            for code in (
+                p.outdegree_code,
+                p.reference_code,
+                p.block_count_code,
+                p.block_code,
+                p.residual_code,
+            )
+        )
         cyclic = p.window_size + 1
 
         d = rd_out()
@@ -447,17 +437,10 @@ class _Decoder:
 
         residuals: list[int] = []
         if extra_count > 0:
-            code = p.residual_code
-            if code == ZETA:
-                raw = r.read_zeta_run(extra_count, p.zeta_k)
-            elif code == GAMMA:
-                raw = r.read_gamma_run(extra_count)
-            else:
-                raw = [rd_res() for _ in range(extra_count)]
-            v = x + nat2int(raw[0])
+            v = x + nat2int(rd_res())
             residuals.append(v)
-            for g in raw[1:]:
-                v += g + 1
+            for _ in range(extra_count - 1):
+                v += rd_res() + 1
                 residuals.append(v)
 
         if not copied and not intervals:
@@ -488,7 +471,7 @@ class NodeIterator:
         cyclic = p.window_size + 1
         self.window: list[list[int]] = [[] for _ in range(cyclic)]
         self.outd = [0] * cyclic
-        self.reader = BitReader(self.dec.data, prepadded=True)
+        self.reader = BitReader(graph_bytes)
         if from_node > 0:
             if offsets is None:
                 raise ValueError("mid-graph start requires offsets")

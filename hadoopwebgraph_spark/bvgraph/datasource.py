@@ -32,7 +32,7 @@ them post-scan (exactly-once semantics preserved); pruning only drops
 partitions that provably contain no matching node.
 
 This module is the one reader of a graph's ``.properties``: other code
-asks ``graph_properties(basename)``, served from the plan cache.
+asks ``graph_properties(basename)``, which reads that small file alone.
 """
 
 from __future__ import annotations
@@ -61,10 +61,10 @@ from .properties import BVGraphProperties, parse_properties
 DEFAULT_SPLITS = 100  # WebGraphInputFormat.java:19
 BATCH_ROWS = 8192  # rows per Arrow record batch handed to Spark
 
-# Driver-side plan cache: parsing .properties and folding the delta-coded
-# .offsets stream is O(n) — do it once per (basename, file identity), not
-# once per action (the reference reloads offsets per TASK, its worst flaw;
-# SURVEY.md §3.1 step 4).
+# Driver-side plan cache: folding the delta-coded .offsets stream is
+# O(n) — do it once per (basename, file identity), not once per action
+# (the reference reloads offsets per TASK, its worst flaw; SURVEY.md
+# §3.1 step 4).
 _PLAN_CACHE: dict[tuple, tuple] = {}
 
 
@@ -81,7 +81,7 @@ def _plan_state(basename: str):
     if hit is None:
         from .ef import EliasFanoOffsets
 
-        p = parse_properties(read_text(basename + ".properties"))
+        p = graph_properties(basename)
         offsets = EliasFanoOffsets(
             load_offsets(read_bytes(basename + ".offsets"), p)
         )
@@ -92,10 +92,10 @@ def _plan_state(basename: str):
 
 
 def graph_properties(basename: str) -> BVGraphProperties:
-    """The graph's parsed ``.properties`` (node and arc counts, codes),
-    from the plan cache — the metadata lookup for code outside the
-    source, which never parses the file itself."""
-    return _plan_state(basename)[0]
+    """The graph's parsed ``.properties`` (node and arc counts, codes) —
+    the one parse of the file, for the planner and for code outside the
+    source. Reads only ``.properties``, never the ``.offsets`` stream."""
+    return parse_properties(read_text(basename + ".properties"))
 
 
 SCHEMA = StructType(

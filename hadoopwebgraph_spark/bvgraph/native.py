@@ -2,9 +2,10 @@
 ``codec``'s decode, segment-encode and offsets entry points. ``codec`` is
 the only caller; it runs its pure-Python spec when a function here
 returns ``None``, which happens only when the kernel is unavailable (no C
-compiler or a load error). Malformed input the
-kernel detects raises ``ValueError`` instead: re-running the Python spec
-on a buffer the kernel rejected would decode zero padding into garbage.
+compiler or a load error). Malformed input the kernel detects raises
+``ValueError`` instead (the spec raises the same error on a truncated
+buffer). The kernel carries all the speed; the spec reads each code by
+its definition.
 Both implementations are pinned to identical outputs by the hypothesis
 suite (tests/test_codec_properties.py).
 

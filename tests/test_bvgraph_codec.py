@@ -29,7 +29,9 @@ from hadoopwebgraph_spark.bvgraph.properties import (
 
 
 def test_code_roundtrips():
-    values = list(range(0, 1000)) + [2**10, 2**16 - 1, 2**20, 2**30, 2**31 - 1]
+    values = list(range(0, 1000)) + [
+        2**10, 2**16 - 1, 2**20, 2**30, 2**31 - 1, 2**31, 2**40, 2**62 - 1
+    ]
     w = BitWriter()
     for v in values:
         w.write_unary(v % 70)
@@ -46,6 +48,21 @@ def test_code_roundtrips():
         for k in (1, 2, 3, 5):
             assert r.read_zeta(k) == v
         assert r.read_nibble() == v
+
+
+def test_read_past_end_raises():
+    """A read that needs bits beyond the buffer raises IndexError instead
+    of returning a value assembled from the bits that are there."""
+    w = BitWriter()
+    w.write_gamma(2**20)  # 41 bits: 20 zeros, a one, 20 low bits
+    short = w.to_bytes()[:4]
+    with pytest.raises(IndexError):
+        BitReader(short).read_gamma()
+    with pytest.raises(IndexError):
+        BitReader(b"\xff").read_int(9)
+    with pytest.raises(IndexError):
+        BitReader(b"\x00").read_unary()
+    assert BitReader(b"\xff", 8).read_int(0) == 0
 
 
 def test_zigzag():

@@ -97,11 +97,11 @@ def test_corrupt_graph_fails_loudly(spark, monkeypatch, tmp_path):
         _read_in_process(reader)
 
 
-def test_truncated_offsets_raise_not_garbage(tmp_path):
-    """Kernel-detected .offsets corruption must surface as an error, not
-    fall back to the Python reader silently decoding zero-padding into
-    garbage offsets: decode_offsets raises on rc<0 and
-    load_offsets propagates it."""
+def test_truncated_offsets_raise_not_garbage(tmp_path, monkeypatch):
+    """A truncated .offsets stream must surface as the same error on both
+    paths, not as garbage offsets: the kernel's decode_offsets raises on
+    rc<0 and load_offsets propagates it; the spec raises at the end of
+    the buffer."""
     import pytest as _pytest
 
     from hadoopwebgraph_spark.bvgraph import native
@@ -116,6 +116,9 @@ def test_truncated_offsets_raise_not_garbage(tmp_path):
     if native.get_lib() is not None:
         with _pytest.raises(ValueError, match="corrupt or truncated"):
             load_offsets(truncated, p)
+    monkeypatch.setattr(native, "get_lib", lambda: None)
+    with _pytest.raises(ValueError, match="corrupt or truncated"):
+        load_offsets(truncated, p)
 
 
 def test_truncated_unary_field_fails_fast():
@@ -353,6 +356,24 @@ def test_ranged_reads_only_partition_extent(monkeypatch):
     p = parse_properties(open(SMALL_BASENAME + ".properties").read())
     backreach_bound = 16 * (p.window_size * (p.max_ref_count + 2) + 2) * file_size // 2000
     assert file_size <= covered <= file_size + backreach_bound
+
+
+def test_graph_properties_reads_only_properties(monkeypatch):
+    """graph_properties is a metadata lookup: it parses .properties and
+    never folds the O(n) .offsets stream, cached or not."""
+    from hadoopwebgraph_spark.bvgraph import datasource as ds
+    from hadoopwebgraph_spark.bvgraph.properties import parse_properties
+
+    def no_fold(*args, **kwargs):
+        raise AssertionError("graph_properties folded the .offsets stream")
+
+    monkeypatch.setattr(ds, "_PLAN_CACHE", {})
+    monkeypatch.setattr(ds, "load_offsets", no_fold)
+    p = ds.graph_properties(SMALL_BASENAME)
+    with open(SMALL_BASENAME + ".properties") as f:
+        want = parse_properties(f.read())
+    assert p.nodes == 2000
+    assert (p.nodes, p.arcs) == (want.nodes, want.arcs)
 
 
 def test_offset_slice_out_of_range_fails_loudly():

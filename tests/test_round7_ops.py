@@ -398,27 +398,31 @@ def test_neighborhood_function_one_action_per_hop(spark):
 def test_encoder_rejects_unsorted_or_duplicate_successors():
     """BVGraph adjacency is a strictly-ascending successor set; both
     encoders previously emitted silently-undecodable bits for unsorted
-    input (gap coding goes negative). Every encode path must now raise."""
+    input (gap coding goes negative). Every encode path must now raise,
+    with the C kernel and with the Python spec."""
+    from unittest import mock
+
     import numpy as np
     import pytest as _pytest
 
+    from hadoopwebgraph_spark.bvgraph import native
     from hadoopwebgraph_spark.bvgraph.codec import (
         BVGraphProperties,
         encode_graph,
         encode_segment_csr,
-        encode_segment_py,
     )
 
     p = BVGraphProperties(nodes=10, arcs=0)
     for bad in ([[8, 2]], [[8, 8]]):
         with _pytest.raises(ValueError, match="ascending"):
             encode_graph(bad + [[]] * 9)
-        with _pytest.raises(ValueError, match="ascending"):
-            encode_segment_py(bad, 7, p)
         vals = np.array(bad[0], dtype=np.int32)
         offs = np.array([0, len(bad[0])], dtype=np.int64)
         with _pytest.raises(ValueError, match="ascending"):
             encode_segment_csr(vals, offs, 7, p)
+        with mock.patch.object(native, "get_lib", lambda: None):
+            with _pytest.raises(ValueError, match="ascending"):
+                encode_segment_csr(vals, offs, 7, p)
     # boundary gaps between lists stay legal: [9] then [2]
     vals = np.array([9, 2], dtype=np.int32)
     offs = np.array([0, 1, 2], dtype=np.int64)

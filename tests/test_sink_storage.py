@@ -93,6 +93,28 @@ def test_fs_for_path_routes_schemes(monkeypatch):
     assert fs.region == "us-east-1"
 
 
+def test_io_plain_paths_use_one_filesystem_path(tmp_path):
+    """Plain paths and ``file://`` URIs give the same bytes and stats, and
+    a missing file raises ``FileNotFoundError`` naming the path."""
+    from hadoopwebgraph_spark.bvgraph.io import (
+        file_stat,
+        read_bytes,
+        read_bytes_range,
+        write_bytes,
+    )
+
+    plain = str(tmp_path / "blob.bin")
+    write_bytes(plain, bytes(range(256)))
+    for path in (plain, "file://" + plain):
+        assert read_bytes(path) == bytes(range(256))
+        assert read_bytes_range(path, 10, 5) == bytes(range(10, 15))
+        assert read_bytes_range(path, 250, 0) == b""
+        assert file_stat(path)[0] == 256
+    missing = str(tmp_path / "missing.offsets")
+    with pytest.raises(FileNotFoundError, match="missing.offsets"):
+        file_stat(missing)
+
+
 def test_compose_multipart_matches_file(tmp_path):
     """Three segments composed from a local-FS store and from a blob
     store give the same bytes, and those bytes are a correct BVGraph."""
