@@ -1,34 +1,16 @@
-"""Bench-scale BVGraph fixture: generated on demand (NOT committed),
-cached on disk, deterministic.
+"""Seeded web-graph generator behind the benchmark (``graphbench``).
 
-The committed 100k-node/739k-arc fixture decodes in milliseconds at
-~25M arcs/s/core x 32 cores — too small to measure the kernel. This
-builds an ``xl`` graph (default 2M nodes, ~48M arcs) with the same
-locality/power-law shape as the committed fixtures (interval, reference
-and residual coding paths all exercised), vectorized with NumPy and
-encoded through the engine's own distributed sink (write_bvgraph), so
-generating the fixture is itself a test of the executor-parallel write
-path at scale.
+``gen_xl_adjacency(n, avg_deg, seed)`` builds, vectorized with NumPy, a
+deterministic adjacency with the locality/power-law shape of the
+committed fixtures, so the interval, reference and residual coding paths
+of the codec all get exercised. Nothing is written to disk here; the
+caller encodes the result.
 """
 
 from __future__ import annotations
 
-import os
 
-XL_NODES = 2_000_000
-XL_AVG_DEG = 24
-XL_SEED = 20240813
-
-_FIXTURE_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    "fixtures",
-    "bvgraph",
-)
-XL_BASENAME = os.path.join(_FIXTURE_DIR, "xl")
-XL_PARQUET = os.path.join(os.path.dirname(_FIXTURE_DIR), "xl_adj.parquet")
-
-
-def gen_xl_adjacency(n: int = XL_NODES, avg_deg: int = XL_AVG_DEG, seed: int = XL_SEED):
+def gen_xl_adjacency(n: int, avg_deg: int, seed: int):
     """Vectorized power-law + locality adjacency. Returns (values int32,
     list_offsets int64[n+1]) in CSR form, successors strictly increasing
     per list."""
@@ -58,32 +40,3 @@ def gen_xl_adjacency(n: int = XL_NODES, avg_deg: int = XL_AVG_DEG, seed: int = X
     list_offsets = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(counts, out=list_offsets[1:])
     return u_dst, list_offsets
-
-
-def ensure_xl_fixture(spark) -> str:
-    """Generate the xl parquet twin + BVGraph triple if absent; return
-    the basename. Idempotent and deterministic, so every round reuses
-    the first build (the files are gitignored, not committed)."""
-    if os.path.exists(XL_BASENAME + ".properties") and os.path.exists(XL_PARQUET):
-        return XL_BASENAME
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from .sink import write_bvgraph
-
-    values, list_offsets = gen_xl_adjacency()
-    n = len(list_offsets) - 1
-    os.makedirs(_FIXTURE_DIR, exist_ok=True)
-    table = pa.table(
-        {
-            "src": pa.array(np.arange(n, dtype=np.int32)),
-            "adj": pa.ListArray.from_arrays(
-                pa.array(list_offsets, type=pa.int32()), pa.array(values)
-            ),
-        }
-    )
-    pq.write_table(table, XL_PARQUET)
-    df = spark.read.parquet(XL_PARQUET)
-    write_bvgraph(df, XL_BASENAME)
-    return XL_BASENAME

@@ -36,8 +36,8 @@ _T = f"read_parquet('{SMALL_PARQUET}')"
 
 
 def graph_basename() -> str:
-    """The active graph: $SPARK_GRAFT_GRAPH_BASENAME (benchmarking
-    against a larger graph), else the committed 2k-node fixture."""
+    """The active graph, resolved here only: $SPARK_GRAFT_GRAPH_BASENAME
+    (e.g. a larger graph), else the committed 2k-node fixture."""
     return os.environ.get("SPARK_GRAFT_GRAPH_BASENAME", SMALL_BASENAME)
 
 
@@ -49,12 +49,7 @@ def _memo_key(spark: SparkSession, tag: str) -> tuple:
     """Memo identity for a shared decode: the session plus everything
     that changes what graph_df/edges_df read (fixtures are immutable
     within a session, so content never enters the key)."""
-    return (
-        id(spark),
-        graph_basename(),
-        os.environ.get("SPARK_GRAFT_GRAPH_SPLITS", ""),
-        tag,
-    )
+    return (id(spark), graph_basename(), tag)
 
 
 def _materialize(df: DataFrame, key: tuple | None = None) -> DataFrame:
@@ -69,7 +64,7 @@ def _materialize(df: DataFrame, key: tuple | None = None) -> DataFrame:
     used to pin two separate cache entries (measured r12 —
     getPersistentRDDs grew per call; the r11 "registers by logical
     plan" claim only holds for parquet-rooted plans). ``key`` fixes
-    that: same (session, basename, splits, site) returns the SAME
+    that: same (session, basename, site) returns the SAME
     cached DataFrame, so repeated queries reuse one entry and one
     decode.
 
@@ -98,19 +93,41 @@ def _materialize(df: DataFrame, key: tuple | None = None) -> DataFrame:
 release_materialized = release_all
 
 def graph_df(spark: SparkSession, basename: str | None = None) -> DataFrame:
-    """Adjacency DataFrame from the BVGraph source (env override for
-    benchmarking against the larger committed fixture).
+    """Adjacency DataFrame of ``basename`` (default: the active graph,
+    ``graph_basename()``) from the BVGraph source.
 
-    numSplits defaults to the cluster's core count rather than the
-    reference's fixed 100 (WebGraphInputFormat.java:19): per-task Python
-    worker round-trips dominate when tasks decode only a few KB."""
+    numSplits is the cluster's core count rather than the reference's
+    fixed 100 (WebGraphInputFormat.java:19): per-task Python worker
+    round-trips dominate when tasks decode only a few KB."""
     basename = basename or graph_basename()
-    num_splits = int(
-        os.environ.get(
-            "SPARK_GRAFT_GRAPH_SPLITS", spark.sparkContext.defaultParallelism
-        )
+    return read_bvgraph(
+        spark, basename, num_splits=spark.sparkContext.defaultParallelism
     )
-    return read_bvgraph(spark, basename, num_splits=num_splits)
+
+
+_SCRATCH_DIRS: set[str] = set()
+
+
+def _scratch_dir(tag: str) -> str:
+    """An empty per-process scratch dir ``<temp>/hwg_<tag>.<pid>`` for a
+    query's graph copy, removed at interpreter exit.
+
+    The dir is wiped on every call, so repeated runs in one process keep
+    one copy; the pid keeps concurrent processes out of each other's
+    in-flight files. The returned DataFrame reads the copy lazily, so it
+    can't be deleted when the query returns — one ``atexit`` rmtree per
+    dir reaps it instead."""
+    import atexit
+    import shutil
+    import tempfile
+
+    out_dir = os.path.join(tempfile.gettempdir(), f"hwg_{tag}.{os.getpid()}")
+    shutil.rmtree(out_dir, ignore_errors=True)
+    os.makedirs(out_dir)
+    if out_dir not in _SCRATCH_DIRS:
+        _SCRATCH_DIRS.add(out_dir)
+        atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    return out_dir
 
 
 def edges_df(spark: SparkSession, basename: str | None = None) -> DataFrame:
@@ -564,25 +581,12 @@ def g23_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dst) and the sink's one job writes segments executor-parallel.",
 )
 def g24_transpose_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..bvgraph.transform import _write_dense
 
     reversed_edges = edges_df(spark).select(
         F.col("dst").alias("src"), F.col("src").alias("dst")
     )
-    # per-PROCESS scratch dir wiped per run: repeated invocations in one
-    # process (driver rounds, bench, CLI) keep one graph copy instead of
-    # leaking a mkdtemp triple per call, while concurrent processes
-    # (pytest-xdist, bench alongside CLI) can't rmtree each other's
-    # in-flight files
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"hwg_g24_transpose.{os.getpid()}"
-    )
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
-    basename = os.path.join(out_dir, "transpose")
+    basename = os.path.join(_scratch_dir("g24_transpose"), "transpose")
     _write_dense(reversed_edges, graph_properties(graph_basename()).nodes, basename)
     back = read_bvgraph(spark, basename, num_splits=8)
     return back.select(
@@ -666,21 +670,13 @@ def host_contract(edges: DataFrame) -> DataFrame:
     "against the parquet-twin permutation.",
 )
 def g31_permute_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..bvgraph.transform import permute_bvgraph, reverse_permutation
 
     # always the 2k fixture (NOT the bench basename override): the
     # oracle reads this fixture's parquet twin
     src = SMALL_BASENAME
     n = graph_properties(src).nodes
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"hwg_g31_permute.{os.getpid()}"
-    )
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
-    dst = os.path.join(out_dir, "permuted")
+    dst = os.path.join(_scratch_dir("g31_permute"), "permuted")
     permute_bvgraph(spark, src, dst, reverse_permutation(spark, n), num_splits=8)
     back = read_bvgraph(spark, dst, num_splits=8)
     return back.select(
@@ -722,9 +718,6 @@ def g31_permute_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "edge-set union on the parquet twin.",
 )
 def g34_union_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..bvgraph.transform import (
         permute_bvgraph,
         reverse_permutation,
@@ -735,18 +728,7 @@ def g34_union_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle reads this fixture's parquet twin
     src = SMALL_BASENAME
     n = graph_properties(src).nodes
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"hwg_g34_union.{os.getpid()}"
-    )
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
-    # the returned DataFrame lazily reads union_dst, so the triple can't
-    # be deleted here — reap it at interpreter exit instead of leaking
-    # the last run's artifacts under long-lived pids (repeat
-    # registrations are harmless: rmtree ignores the missing dir)
-    import atexit
-
-    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    out_dir = _scratch_dir("g34_union")
     perm_dst = os.path.join(out_dir, "permuted")
     union_dst = os.path.join(out_dir, "union")
     permute_bvgraph(

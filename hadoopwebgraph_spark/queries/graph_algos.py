@@ -19,13 +19,11 @@ hand-computed fixtures (tests/test_graph_algos.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from .graph import _T, edges_df, graph_df
+from .graph import _T, edges_df, graph_basename, graph_df
 
 
 def _shuffle_partitions(spark: SparkSession) -> int:
@@ -1622,7 +1620,7 @@ def _scc_fixture(spark: SparkSession) -> DataFrame:
     g29 and g30 all need it, and the peel is the expensive part of all
     three driver gates. The cache holds plain (node, scc_id) rows —
     session-independent, deterministic (min-label peel), 400 rows."""
-    key = os.environ.get("SPARK_GRAFT_GRAPH_BASENAME", "default")
+    key = graph_basename()
     rows = _SCC_FIXTURE_CACHE.get(key)
     if rows is None:
         rows = [

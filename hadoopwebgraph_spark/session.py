@@ -1,7 +1,8 @@
-"""SparkSession factory tuned for the driver's local[32] harness while
-remaining cluster-correct (every setting below is what you would also set
-on a 1000-executor cluster, except shuffle partitions which scale with
-cluster cores)."""
+"""SparkSession factory: a local session sized to the host (one task slot
+per core, unless $SPARK_GRAFT_CPUS says otherwise) while remaining
+cluster-correct (every setting below is what you would also set on a
+1000-executor cluster, except shuffle partitions which scale with cluster
+cores)."""
 
 from __future__ import annotations
 
@@ -18,7 +19,7 @@ def _default_driver_mem() -> str:
 
 
 def get_spark(app_name: str = "hadoopwebgraph_spark") -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -46,24 +47,6 @@ def get_spark(app_name: str = "hadoopwebgraph_spark") -> SparkSession:
         # convert to a microsecond timestamp.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    # Measurement-session heap hygiene (r18, guide §5): commit + touch
-    # the whole driver heap ONCE at startup instead of expanding it
-    # lazily under query allocation pressure. Measured mechanism: after
-    # an allocation-heavy block (the bench's 48M-arc gXL entries) the G1
-    # heap EXPANDS during later queries and the page-commit cost lands
-    # on their task threads — q62's steady-state degraded 0.8s -> 5.5s
-    # across successive runs with ~1.2M minor faults/run and RSS growing
-    # 5 -> 13 GB, at 0% hypervisor steal; with Xms=Xmx + AlwaysPreTouch
-    # the same sequence is flat at 0.8-1.0s and ~3k faults/run. Opt-in
-    # via env (bench.py / profile_one set it through benchlib) because
-    # the ~15s pretouch of a 24g heap is wasteful for short-lived test
-    # sessions; on a production cluster the equivalent executor-side
-    # setting (Xms=Xmx, AlwaysPreTouch) is standard for dedicated nodes.
-    if os.environ.get("SPARK_GRAFT_PRETOUCH", "") == "1":
-        builder = builder.config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{driver_mem} -XX:+AlwaysPreTouch",
-        )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     # Register the custom BVGraph source (and its filter pushdown) on
