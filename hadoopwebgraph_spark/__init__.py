@@ -21,4 +21,10 @@ DataFrame/SQL stack:
 - ``streaming/`` — Structured Streaming paths for the events table.
 """
 
+from . import _imports
+
+# Spark's Python workers invalidate the import caches on every task; keep
+# that from re-reading every zip archive on sys.path (see _imports).
+_imports.install()
+
 __version__ = "0.1.0"

@@ -294,11 +294,9 @@ class BVGraphDataSource(DataSource):
 
 
 def register(spark) -> None:
-    try:
-        # required for pushFilters; runtime-settable
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
+    # Without it Spark never calls pushFilters, and every src lookup would
+    # quietly scan all partitions; so a conf that cannot be set is an error.
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(BVGraphDataSource)
 
 

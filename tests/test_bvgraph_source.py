@@ -18,6 +18,7 @@ from pyspark.sql.datasource import (
 from hadoopwebgraph_spark.bvgraph.datasource import (
     BVGraphReader,
     read_bvgraph,
+    register,
 )
 from hadoopwebgraph_spark.queries.graph import SMALL_BASENAME, SMALL_PARQUET
 
@@ -294,6 +295,29 @@ def test_bad_options(spark):
         spark.read.format("bvgraph").load().collect()  # missing basename
     with pytest.raises(Exception):
         read_bvgraph(spark, SMALL_BASENAME, num_splits=0).collect()
+
+
+def test_register_fails_when_filter_pushdown_cannot_be_enabled():
+    """Without the pushdown conf every src lookup would scan all
+    partitions, so a conf that refuses it must not be swallowed."""
+
+    class _Conf:
+        def set(self, key, value):
+            raise RuntimeError(f"cannot set {key}")
+
+    class _Registry:
+        registered = []
+
+        def register(self, cls):
+            self.registered.append(cls)
+
+    class _Spark:
+        conf = _Conf()
+        dataSource = _Registry()
+
+    with pytest.raises(RuntimeError, match="filterPushdown"):
+        register(_Spark())
+    assert _Registry.registered == []
 
 
 def test_bench_fixture_partition_invariance(spark):
